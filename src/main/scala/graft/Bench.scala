@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
   * Failures are surfaced per-query in an "errors" object (and the failing
@@ -106,28 +105,13 @@ object Bench {
       if (filterArgs.nonEmpty) { n => filterArgs.exists(n.contains) } else _ => true
     val sfDir = dirArgs.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.envCpus
     // cpus feeds local[$cpus] verbatim (so "*" stays a valid master spec);
-    // the NUMERIC uses (calibration threads, shuffle partitions) parse
-    // defensively instead of crashing the bench on a non-integer spec.
-    val cpuCount = scala.util.Try(cpus.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpuCount)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.ts is parquet timestamp[ns]; read as long (nanos) and let
-      // EventAnalytics.events() normalize to TimestampType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep catalog scaffolding (bucketed-table metadata) out of the
-      // repo working tree — table DATA already goes to tmpdir paths
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    T.quietBoundedWindowWarnings()
+    // the calibration threads use its parsed count
+    val cpuCount = GraftSession.cpuCount(cpus)
+    val repeats = GraftSession.positiveInt("SPARK_GRAFT_BENCH_REPEATS",
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3"))
+    val spark = GraftSession.local(cpus)
     val calibPre = calibrate(cpuCount)
     val calibIoPre = calibrateIo()
     // Warm the session before timing: JVM/codegen/parquet-reader costs land
@@ -235,10 +219,7 @@ object Bench {
     // (huge repeats inflating pass_totals + 8 failed names) — print the
     // shortest line rather than throwing after a full run
     println(Iterator(15, 10, 5, 0).map(line).find(_.length < 1500).getOrElse(line(0)))
-    graft.SessionMemo.clear(spark)
-    graft.relational.Relational.dropBucketedTables(spark)
-    graft.sources.Formats.dropScratch()
-    graft.sources.Layout.dropScratch()
+    GraftSession.release(spark)
     spark.stop()
   }
 }

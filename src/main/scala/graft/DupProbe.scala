@@ -131,17 +131,7 @@ object DupProbe {
     val baseDir = dirArgs.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val cap = 1000 // mirrors LlmOps.jaccardMaxDf (and the oracle SQL)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    T.quietBoundedWindowWarnings()
+    val spark = GraftSession.local("32")
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

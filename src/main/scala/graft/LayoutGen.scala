@@ -70,14 +70,7 @@ object LayoutGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: LayoutGen <srcSfDir> <outRoot> [layout…]")
     val layouts = if (args.length > 2) args.drop(2).toSeq else allLayouts
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("8")
     generate(spark, args(0), args(1), layouts)
     spark.stop()
   }

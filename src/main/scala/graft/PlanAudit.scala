@@ -1,13 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","32")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.adaptive.enabled","true")
-      .config("spark.sql.legacy.parquet.nanosAsLong","true")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = GraftSession.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"
     for (name <- args) {

@@ -40,8 +40,8 @@ object T {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Scratch warehouse for catalog metadata (bucketed tables) shared by
-    * the test session, Bench, and Verify — ONE definition so the
+  /** Scratch warehouse for catalog metadata (bucketed tables) that
+    * [[GraftSession]] sets on every session — ONE definition so the
     * harnesses cannot silently fork layouts, and never the repo CWD
     * (warehouse.dir is a STATIC conf, set only at session build). */
   def warehouseDir: String = s"${sys.props("java.io.tmpdir")}/graft_warehouse"
@@ -217,16 +217,23 @@ object T {
     * 1.7 s, q_corr_matrix 1.9 → 1.5 s (same-JVM interleaved A/B ×3,
     * identical results). Those sites call this; nothing else does.
     *
-    * The guard is LAYOUT-derived, not scale-tuned: rebalance only when
-    * the resolved scan yields fewer than half the cluster's cores
-    * (defaultParallelism, so the same code adapts to any core count)
-    * AND the input is big enough that a shuffle beats a serial map
-    * stage (plan-stats bytes > graft.read.rebalanceMinBytes, default
-    * 512 KiB). On a production lake (row groups ≈ 128 MB, parts ≫
-    * cores) the condition is false and this is a no-op. Round-robin
-    * repartition keeps Spark's sort-before-repartition retry
-    * determinism, and every registry result is partition-invariant by
-    * construction (Verify's local[7] invariance audit is the gate). */
+    * The guard is LAYOUT-derived, not scale-tuned. It fires only when
+    * BOTH strict comparisons hold:
+    *  - `parts * 2 < defaultParallelism`, where `parts` is the input's
+    *    partition count (so the same code adapts to any core count;
+    *    exactly half the cores does not fire);
+    *  - the optimized plan's stats `sizeInBytes > minBytes`, where
+    *    minBytes is graft.read.rebalanceMinBytes, default 512 KiB
+    *    (exactly 512 KiB does not fire).
+    * PRECONDITION: `df` must be free of exchanges (a scan plus narrow
+    * operators). `parts` is read from `df.rdd`, which after a shuffle
+    * is the post-shuffle count, not the scan's, so the guard would
+    * measure the wrong stage. On a production lake (row groups ≈
+    * 128 MB, parts ≫ cores) the condition is false and this is a
+    * no-op. Round-robin repartition keeps Spark's
+    * sort-before-repartition retry determinism, and every registry
+    * result is partition-invariant by construction (Verify's local[7]
+    * invariance audit is the gate). */
   def scanRebalanced(spark: SparkSession, df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // no partition probe on streaming plans
     if (!spark.conf.get("graft.read.rebalance", "true").toBoolean) return df

@@ -114,8 +114,8 @@ object ScaleProbe {
     * for a fixed plan+data, so they are the sharper superlinearity
     * signal — a quadratic candidate join shows up in bytes even when
     * ambient noise hides it in seconds. Tallied with a stage listener;
-    * listener delivery is async, so the tally is read after a short
-    * grace wait (ratios with slack absorb a straggler stage). */
+    * listener delivery is async, so the tally is read after draining
+    * the listener bus. */
   private class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
     val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
     override def onStageCompleted(
@@ -136,7 +136,7 @@ object ScaleProbe {
         q.run(spark, dir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      Thread.sleep(300) // let the listener bus drain the last stages
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       (ts.sorted.apply(ts.size / 2), tally.bytes.get())
     } finally spark.sparkContext.removeSparkListener(tally)
   }
@@ -153,17 +153,7 @@ object ScaleProbe {
     val names = if (filters.nonEmpty) pool.filter(p => filters.exists(p.contains)) else pool
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val slack = 1.5
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    T.quietBoundedWindowWarnings()
+    val spark = GraftSession.local("32")
     // THREE measurement points: base, N/2, N. The time gate runs
     // base→N (end-to-end growth ≲ N). The BYTES gate runs on the
     // N/2→N SLOPE only: between base and scale, AQE legitimately

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-throughput measurement for the §2.10 surface: the
   * correctness story is spec-proven (stream ≡ batch, replay
   * idempotency), but a scale posture needs a measured rows/sec line.
@@ -35,18 +33,9 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val chunks = args.drop(1).headOption.flatMap(a => scala.util.Try(a.toInt).toOption)
+    val chunks = args.lift(1).map(GraftSession.positiveInt("StreamBench chunks", _))
       .getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    T.quietBoundedWindowWarnings()
+    val spark = GraftSession.local("32")
 
     val root = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_streambench_${T.scratchKey(sfDir)}")

@@ -196,35 +196,25 @@ object StreamStateProbe {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", canonicalSf))
     // strict: a typo'd chunk count must not silently record receipts
     // labeled for the canonical 64 (r14 advice; matches DupProbe)
-    val chunks = args.drop(1).headOption.map { a =>
-      scala.util.Try(a.toInt).toOption.filter(_ > 0).getOrElse(
-        sys.error(s"StreamStateProbe: chunks arg must be a positive Int, got '$a'"))
-    }.getOrElse(canonicalChunks)
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val chunks = args.lift(1).map(GraftSession.positiveInt("StreamStateProbe chunks", _))
+      .getOrElse(canonicalChunks)
+    val spark = GraftSession.local("32",
       // state-op parallelism, not correctness: 8 keeps 5 x ~64 RocksDB
       // micro-batches fast; state ROW counts are partition-independent
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // GRAFT_ROCKSDB_MAX_MB: opt-in bounded-memory mode — the r15
       // adjudication instrument for the memoryUsedBytes question. With a
       // shared capped cache the metric must PLATEAU at the cap if the
       // unbounded-mode linear growth is cache/memtable accounting (dead
       // blocks of rotated SST files) rather than live state; live state
       // itself is gated via sst_bytes either way.
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        sys.env.contains("GRAFT_ROCKSDB_MAX_MB").toString)
-      .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB",
-        sys.env.getOrElse("GRAFT_ROCKSDB_MAX_MB", "500"))
-      .config("spark.sql.streaming.numRecentProgressUpdates", chunks + 64)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    T.quietBoundedWindowWarnings()
+      "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage" ->
+        sys.env.contains("GRAFT_ROCKSDB_MAX_MB").toString,
+      "spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB" ->
+        sys.env.getOrElse("GRAFT_ROCKSDB_MAX_MB", "500"),
+      "spark.sql.streaming.numRecentProgressUpdates" -> (chunks + 64).toString)
     import spark.implicits._
 
     val staged = stageChunks(spark, sfDir, chunks)

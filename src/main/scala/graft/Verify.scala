@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val nameFilter: String => Boolean =
       if (args.length > 2) { n => args.drop(2).exists(n.contains) } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet timestamp[ns]; read as long (nanos) and let
-      // EventAnalytics.events() normalize to TimestampType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep catalog scaffolding (bucketed-table metadata) out of the
-      // repo working tree — table DATA already goes to tmpdir paths
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    T.quietBoundedWindowWarnings()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
     // Run in REGISTRY order (not SparkEntry.queries — that Map is a
     // hash-scrambled HashMap) and release each memoized FRAME right
@@ -84,10 +70,7 @@ object Verify {
     val json = SparkEntry.oracleSqlFor(spark, sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.SessionMemo.clear(spark)
-    graft.relational.Relational.dropBucketedTables(spark)
-    graft.sources.Formats.dropScratch()
-    graft.sources.Layout.dropScratch()
+    GraftSession.release(spark)
     spark.stop()
 
     // Partition-invariance audit (opt-in): SPARK_GRAFT_VERIFY_CORES=N
@@ -99,16 +82,7 @@ object Verify {
     // fails loudly instead of recording a silently weaker check. (One
     // SparkContext per JVM → the main session must stop first.)
     sys.env.get("SPARK_GRAFT_VERIFY_CORES").foreach { altCores =>
-      val alt = SparkSession.builder()
-        .master(s"local[$altCores]")
-        .config("spark.sql.shuffle.partitions", altCores)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", T.warehouseDir)
-        .getOrCreate()
-      alt.sparkContext.setLogLevel("WARN")
-      T.quietBoundedWindowWarnings()
+      val alt = GraftSession.local(altCores)
       //  field separator prevents boundary aliasing (("ab","c")
       // vs ("a","bc")); the NUL-prefixed marker keeps SQL NULL distinct
       // from the literal string "null" — neither char appears in data.
@@ -140,10 +114,7 @@ object Verify {
         }
         SessionMemo.clearFrames(alt, MemoLiveness.releasableAfter(q.name))
       }
-      graft.SessionMemo.clear(alt)
-      graft.relational.Relational.dropBucketedTables(alt)
-      graft.sources.Formats.dropScratch()
-      graft.sources.Layout.dropScratch()
+      GraftSession.release(alt)
       alt.stop()
       if (drifted > 0) {
         System.err.println(s"[verify] PARTITION-INVARIANCE FAILED: $drifted of $checked queries drifted at local[$altCores]")

@@ -1,7 +1,5 @@
 package graft.llmops
 
-import org.apache.spark.sql.SparkSession
-
 /** BPE merge-count stress probe (round-19 mandate): train the merge
   * table at k = 8, 16, 24, 32 rounds on one session and gate that wall
   * time stays ~linear in k — i.e. the PER-ROUND cost is flat. Without
@@ -37,15 +35,7 @@ object BpeProbe {
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
     val ks = if (kArgs.nonEmpty) kArgs.map(_.toInt).toSeq else Seq(8, 16, 24, 32)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", graft.T.warehouseDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("32")
     try {
       // the one corpus-sized pass, shared by every k — pay it up front
       BpeMerges.bpeWords(spark, dir).count()

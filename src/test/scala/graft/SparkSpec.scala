@@ -6,19 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** Shared local SparkSession for all specs (one JVM-wide session; specs in
-  * one forked test JVM reuse it). Mirrors the Verify/Bench session config
+  * one forked test JVM reuse it). Built by the same factory as the mains
   * so tests see the same semantics the driver harness does. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", T.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local("4", "spark.app.name" -> "graft-tests")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
@@ -33,10 +25,7 @@ trait SparkSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   // release LlmOps' memoized frames after each suite (the session itself
   // is shared JVM-wide; the next suite rebuilds what it needs)
   override protected def afterAll(): Unit = {
-    graft.SessionMemo.clear(spark)
-    graft.relational.Relational.dropBucketedTables(spark)
-    graft.sources.Formats.dropScratch()
-    graft.sources.Layout.dropScratch()
+    GraftSession.release(spark)
     super.afterAll()
   }
 }

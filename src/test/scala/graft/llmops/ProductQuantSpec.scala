@@ -61,10 +61,10 @@ class ProductQuantSpec extends SparkSpec {
     // fit + code encode + query-vector collect (jobs are expected here)
     Registry.byName("llm_e2_pq_dedup_audit").run(spark, sfDir)
     Registry.byName("llm_e3_pq_topk").run(spark, sfDir)
-    // the listener bus is async: warm-up JobStart events can still be
-    // in the queue when the listener registers, so count only jobs
-    // SUBMITTED after this point (event time, not delivery time)
-    Thread.sleep(100)
+    // the listener bus is async: drain the warm-up JobStart events
+    // before the listener registers, and count only jobs SUBMITTED
+    // after this point (event time, not delivery time)
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
     val t0 = System.currentTimeMillis()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -77,8 +77,8 @@ class ProductQuantSpec extends SparkSpec {
     try {
       Registry.byName("llm_e2_pq_dedup_audit").run(spark, sfDir) // construct only
       Registry.byName("llm_e3_pq_topk").run(spark, sfDir)        // shares the memo
-      // listener delivery is async; give a would-be job time to surface
-      Thread.sleep(1000)
+      // listener delivery is async; drain so a would-be job surfaces
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       withClue("constructing PQ queries with a warm memo must run no jobs") {
         jobs.get() shouldBe 0
       }

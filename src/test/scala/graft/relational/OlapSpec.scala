@@ -12,7 +12,7 @@ class OlapSpec extends SparkSpec {
 
   test("pivot with pinned values constructs job-free and conserves total spend") {
     run("q_pivot_status_spend") // warm the T() table memo
-    Thread.sleep(100)
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
     val t0 = System.currentTimeMillis()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -24,7 +24,7 @@ class OlapSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       run("q_pivot_status_spend") // pinned values: no distinct-scan job
-      Thread.sleep(1000)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       withClue("pivot with pinned values must not run a distinct-scan job") {
         jobs.get() shouldBe 0
       }
