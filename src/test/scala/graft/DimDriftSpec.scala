@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
   * %43==17 → empty list, %47==23 → 63 slots (off-by-one — the
   * adversarial case for min-length truncation).
   */
-class DimDriftSpec extends SparkSpec {
+class DimDriftSpec extends SparkSpec with AxisMatrix {
 
   private def drift(c: org.apache.spark.sql.Column) =
     when(col("vec_id") % 31 === 4, expr("transform(embedding, x -> x * 0)"))
@@ -61,24 +61,16 @@ class DimDriftSpec extends SparkSpec {
       col("vec_id") % 41 === 11 ||
       col("vec_id") % 43 === 17 || col("vec_id") % 47 === 23
 
-  /** (drifted dir, pruned dir): same corpus, drift applied vs drifted
+  /** Drifted dir and pruned dir: same corpus, drift applied vs drifted
     * rows deleted — the pair the drop-semantics contract equates. */
-  private lazy val dirs: (String, String) = {
-    val d = java.nio.file.Files.createTempDirectory("graft_dimdrift").toString
-    val p = java.nio.file.Files.createTempDirectory("graft_dimpruned").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val (dd, pp) = t match {
-        case "embeddings" =>
-          (base.withColumn("embedding", drift(col("embedding"))),
-            base.filter(!driftedPred))
-        case _ => (base, base)
-      }
-      dd.coalesce(1).write.mode("overwrite").parquet(s"$d/$t.parquet")
-      pp.coalesce(1).write.mode("overwrite").parquet(s"$p/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    (d, p)
+  private lazy val driftedDir: String = fixture("graft_dimdrift") {
+    case ("embeddings", base) => base.withColumn("embedding", drift(col("embedding")))
+    case (_, base) => base
+  }
+
+  private lazy val prunedDir: String = fixture("graft_dimpruned") {
+    case ("embeddings", base) => base.filter(!driftedPred)
+    case (_, base) => base
   }
 
   private val embeddingFamily = Seq(
@@ -89,7 +81,7 @@ class DimDriftSpec extends SparkSpec {
     "llm_e2_pq_dedup_audit", "mm_pair_curation")
 
   test("indexability drops exactly the off-contract (wrong-dim / zero) vectors") {
-    val emb = T(spark, dirs._1, "embeddings")
+    val emb = T(spark, driftedDir, "embeddings")
     val total = emb.count()
     val drifted = emb.filter(driftedPred).count()
     assert(drifted > 0, "fixture must drift some vectors")
@@ -100,28 +92,15 @@ class DimDriftSpec extends SparkSpec {
   }
 
   test("all registry queries execute on the dimension-drifted corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, dirs._1).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(driftedDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 
   test("drop semantics: drifted corpus == corpus with drifted rows deleted") {
-    def canon(name: String, dir: String): Seq[String] = {
-      val df = Registry.byName(name).run(spark, dir)
-      val cols = df.columns.sorted.toSeq
-      df.selectExpr(cols: _*).collect()
-        .map(_.toSeq.map(String.valueOf).mkString("")).sorted.toSeq
-    }
     embeddingFamily.foreach { name =>
       withClue(s"$name: drifted vs pruned results differ — a wrong-dim " +
           "vector leaked past the indexability contract\n") {
-        canon(name, dirs._1) shouldBe canon(name, dirs._2)
+        sameRows(Registry.byName(name), driftedDir, prunedDir) shouldBe None
       }
     }
   }

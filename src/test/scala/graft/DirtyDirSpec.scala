@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import scala.sys.process._
+import AxisMatrix.{ordered, rows}
 
 /** Dirty-directory axis (fifteenth, round 17): a live lake's table dirs
   * accumulate junk beside the data files — markers, crc shadows, editor
@@ -21,18 +22,18 @@ import scala.sys.process._
   * The cross-engine half is the full Verify + check.py gate over
   * `tools/make_fixtures.py dirty` (§2b-j in the verify skill).
   */
-class DirtyDirSpec extends SparkSpec {
+class DirtyDirSpec extends SparkSpec with AxisMatrix {
 
   private lazy val dirtyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirty_spec").toString
+    val dir = tempDir("graft_dirty_spec")
     Seq("python3", "tools/make_fixtures.py", sfDir, dir, "dirty").!!
     s"$dir/graft_dirty_sf"
   }
 
   test("every table reads byte-identically from the junk-polluted dir") {
     T.tableNames.foreach { t =>
-      val clean = T(spark, sfDir, t).collect().map(_.toString).sorted.toSeq
-      val dirty = T(spark, dirtyDir, t).collect().map(_.toString).sorted.toSeq
+      val clean = rows(T(spark, sfDir, t))
+      val dirty = rows(T(spark, dirtyDir, t))
       withClue(t)(dirty shouldBe clean)
     }
   }
@@ -41,8 +42,8 @@ class DirtyDirSpec extends SparkSpec {
     Seq("llm_e4_doc_quality", "e5_sessionization", "llm_e3_cosine_topk",
       "q1_pricing_summary").foreach { name =>
       val q = Registry.byName(name)
-      val clean = q.run(spark, sfDir).collect().map(_.toString).toSeq
-      val dirty = q.run(spark, dirtyDir).collect().map(_.toString).toSeq
+      val clean = ordered(q.run(spark, sfDir))
+      val dirty = ordered(q.run(spark, dirtyDir))
       withClue(name)(dirty shouldBe clean)
     }
   }
@@ -66,15 +67,13 @@ class DirtyDirSpec extends SparkSpec {
       .writeStream.format("memory").queryName("dirty_hourly_t")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
-    val streamed = spark.table("dirty_hourly_t")
-      .collect().map(_.toString).sorted.toSeq
-    val batch = Registry.byName("e5_hourly_event_stats").run(spark, sfDir)
-      .collect().map(_.toString).sorted.toSeq
+    val streamed = rows(spark.table("dirty_hourly_t"))
+    val batch = rows(Registry.byName("e5_hourly_event_stats").run(spark, sfDir))
     streamed shouldBe batch
   }
 
   test("boundary: junk NAMED like data fails loudly (zero-byte x.parquet)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirty_bnd").toString
+    val dir = tempDir("graft_dirty_bnd")
     val d = new java.io.File(s"$dir/documents.parquet"); d.mkdirs()
     val src = new java.io.File(s"$sfDir/documents.parquet")
     java.nio.file.Files.copy(src.toPath,
@@ -88,7 +87,7 @@ class DirtyDirSpec extends SparkSpec {
   }
 
   test("boundary: a garbage .crc naming an EXISTING file fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirty_crc").toString
+    val dir = tempDir("graft_dirty_crc")
     val d = new java.io.File(s"$dir/documents.parquet"); d.mkdirs()
     val src = new java.io.File(s"$sfDir/documents.parquet")
     java.nio.file.Files.copy(src.toPath,

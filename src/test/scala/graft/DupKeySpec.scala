@@ -42,38 +42,26 @@ import org.apache.spark.sql.functions._
   *  the audit still detects it (uniqueness counts distinct keys), but
   *  per-op semantics are only guaranteed deterministic, not meaningful.
   */
-class DupKeySpec extends SparkSpec {
+class DupKeySpec extends SparkSpec with AxisMatrix {
 
   /** In-JVM twin of the pyarrow fixture: duplicate rows appended at the
     * end of each table, residues chosen per key. */
   private lazy val dupDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dupkey").toString
     val rules = Map(
       "events" -> (col("event_id") % 9 === 2),
       "documents" -> (col("doc_id") % 11 === 3),
       "embeddings" -> (col("vec_id") % 13 === 5),
       "orders" -> (col("o_orderkey") % 17 === 7),
       "lineitem" -> (col("l_orderkey") % 19 === 4))
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val out = rules.get(t).map(p => base.unionAll(base.filter(p))).getOrElse(base)
-      out.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    fixture("graft_dupkey") { (t, base) =>
+      rules.get(t).map(p => base.unionAll(base.filter(p))).getOrElse(base)
     }
-    SessionMemo.clear(spark)
-    dir
   }
 
   private def run(name: String, dir: String) = Registry.byName(name).run(spark, dir)
 
   test("all registry queries execute on the duplicate-key corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, dupDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(dupDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 
@@ -130,9 +118,9 @@ class DupKeySpec extends SparkSpec {
       "parity_a4_language_list")    // distinct dimension list
     invariant.foreach { name =>
       SessionMemo.clear(spark)
-      val base = run(name, sfDir).collect().map(_.toString).sorted
+      val base = AxisMatrix.rows(run(name, sfDir))
       SessionMemo.clear(spark)
-      val dup = run(name, dupDir).collect().map(_.toString).sorted
+      val dup = AxisMatrix.rows(run(name, dupDir))
       withClue(name) { dup shouldBe base }
     }
   }

@@ -23,27 +23,12 @@ package graft
   * DuckDB comparison on empty global aggregates is a separate contract
   * — the pinned property is "no query throws on empty input".
   */
-class EmptyInputSpec extends SparkSpec {
+class EmptyInputSpec extends SparkSpec with AxisMatrix {
 
-  private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty").toString
-    T.tableNames.foreach { t =>
-      T(spark, sfDir, t).limit(0).coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark) // drop memoized frames keyed on the build session
-    dir
-  }
+  private lazy val emptyDir: String = fixture("graft_empty")((_, base) => base.limit(0))
 
   test("all registry queries execute on an all-empty corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, emptyDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(emptyDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import scala.sys.process._
+import AxisMatrix.{ordered, rows}
 
 /** Physical-encoding drift axis (sixteenth, round 17): one table dir
   * mixes files whose writers chose different codecs (zstd, gzip,
@@ -12,10 +13,10 @@ import scala.sys.process._
   * check.py gate over `tools/make_fixtures.py encdrift` (§2b-p in the
   * verify skill).
   */
-class EncodingDriftSpec extends SparkSpec {
+class EncodingDriftSpec extends SparkSpec with AxisMatrix {
 
   private def buildAxis(axis: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_enc_spec").toString
+    val dir = tempDir("graft_enc_spec")
     Seq("python3", "tools/make_fixtures.py", sfDir, dir, axis).!!
     s"$dir/graft_${axis}_sf"
   }
@@ -30,8 +31,8 @@ class EncodingDriftSpec extends SparkSpec {
 
   private def tablesIdentical(dir: String): Unit =
     T.tableNames.foreach { t =>
-      val clean = T(spark, sfDir, t).collect().map(_.toString).sorted.toSeq
-      val mixed = T(spark, dir, t).collect().map(_.toString).sorted.toSeq
+      val clean = rows(T(spark, sfDir, t))
+      val mixed = rows(T(spark, dir, t))
       withClue(t)(mixed shouldBe clean)
     }
 
@@ -41,8 +42,8 @@ class EncodingDriftSpec extends SparkSpec {
     Seq("llm_e4_doc_quality", "e5_sessionization", "llm_e2_semdedup",
       "q1_pricing_summary").foreach { name =>
       val q = Registry.byName(name)
-      val clean = q.run(spark, sfDir).collect().map(_.toString).toSeq
-      val mixed = q.run(spark, dir).collect().map(_.toString).toSeq
+      val clean = ordered(q.run(spark, sfDir))
+      val mixed = ordered(q.run(spark, dir))
       withClue(name)(mixed shouldBe clean)
     }
 

@@ -30,40 +30,24 @@ import org.apache.spark.sql.functions._
   * re-encoding (PLANS.md round 13) whose dir feeds the full
   * Verify + check.py oracle gate — this spec is the engine-side
   * no-throw + determinism + structure half. */
-class KeyCollapseSpec extends SparkSpec {
+class KeyCollapseSpec extends SparkSpec with AxisMatrix {
 
   private val oneUser = 7L
   private val oneTsUs = 1705320000000000L // 2024-01-15T12:00:00Z, in retention
 
-  private lazy val collapsedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_collapse").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val out = t match {
-        case "events" =>
-          base.withColumn("user_id", lit(oneUser))
-            .withColumn("ts", timestamp_micros(lit(oneTsUs)))
-        case "documents" =>
-          val template = base.orderBy("doc_id").select("text")
-            .limit(1).collect()(0).getString(0)
-          base.withColumn("text", lit(template))
-        case _ => base
-      }
-      out.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private lazy val collapsedDir: String = fixture("graft_collapse") {
+    case ("events", base) =>
+      base.withColumn("user_id", lit(oneUser))
+        .withColumn("ts", timestamp_micros(lit(oneTsUs)))
+    case ("documents", base) =>
+      val template = base.orderBy("doc_id").select("text")
+        .limit(1).collect()(0).getString(0)
+      base.withColumn("text", lit(template))
+    case (_, base) => base
   }
 
   test("all registry queries execute on the fully-collapsed corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, collapsedDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(collapsedDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 
@@ -78,7 +62,7 @@ class KeyCollapseSpec extends SparkSpec {
       val q = Registry.byName(n)
       def runOnce(): Seq[String] = {
         SessionMemo.clear(spark)
-        q.run(spark, collapsedDir).collect().toSeq.map(_.toString)
+        AxisMatrix.ordered(q.run(spark, collapsedDir))
       }
       val (a, b) = (runOnce(), runOnce())
       if (a == b) None

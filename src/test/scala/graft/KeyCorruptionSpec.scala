@@ -38,34 +38,25 @@ import org.apache.spark.sql.functions._
   * the PAYLOAD-CONSISTENT rules count corrupt dups (extra payload
   * variants under reused keys) which exact dups never trip.
   */
-class KeyCorruptionSpec extends SparkSpec {
+class KeyCorruptionSpec extends SparkSpec with AxisMatrix {
 
   /** Keys reused with different payloads, appended at the end (the
     * second writer's output). Residues disjoint from DupKeySpec's. */
-  private def buildCorruptDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_keycorrupt").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val out = t match {
-        case "documents" =>
-          base.unionAll(base.filter(col("doc_id") % 23 === 11)
-            .withColumn("text", concat(col("text"), lit(" zz corrupted variant payload"))))
-        case "embeddings" =>
-          base.unionAll(base.filter(col("vec_id") % 29 === 13)
-            .withColumn("embedding", reverse(col("embedding"))))
-        case "events" =>
-          base.unionAll(base.filter(col("event_id") % 31 === 17)
-            .withColumn("value", col("value") + 1000.0)
-            .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR")))
-        case "orders" =>
-          base.unionAll(base.filter(col("o_orderkey") % 37 === 19)
-            .withColumn("o_totalprice", col("o_totalprice") + 1))
-        case _ => base
-      }
-      out.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private def buildCorruptDir(): String = fixture("graft_keycorrupt") {
+    case ("documents", base) =>
+      base.unionAll(base.filter(col("doc_id") % 23 === 11)
+        .withColumn("text", concat(col("text"), lit(" zz corrupted variant payload"))))
+    case ("embeddings", base) =>
+      base.unionAll(base.filter(col("vec_id") % 29 === 13)
+        .withColumn("embedding", reverse(col("embedding"))))
+    case ("events", base) =>
+      base.unionAll(base.filter(col("event_id") % 31 === 17)
+        .withColumn("value", col("value") + 1000.0)
+        .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR")))
+    case ("orders", base) =>
+      base.unionAll(base.filter(col("o_orderkey") % 37 === 19)
+        .withColumn("o_totalprice", col("o_totalprice") + 1))
+    case (_, base) => base
   }
 
   private lazy val corruptDir: String = buildCorruptDir()
@@ -73,14 +64,7 @@ class KeyCorruptionSpec extends SparkSpec {
   private def run(name: String, dir: String) = Registry.byName(name).run(spark, dir)
 
   test("all registry queries execute on the key-corrupted corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, corruptDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(corruptDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 
@@ -108,21 +92,17 @@ class KeyCorruptionSpec extends SparkSpec {
     // above plus DupKeySpec's exact-copy residues — must land
     // v_uniq = exact + corrupt while v_corrupt counts ONLY the
     // payload-diff reuse: the discriminator the round-15 pilot promised
-    val dir = java.nio.file.Files.createTempDirectory("graft_mixeddup").toString
     val exactResidues = Map( // DupKeySpec's residues (disjoint recipe)
       "events" -> (col("event_id") % 9 === 2),
       "documents" -> (col("doc_id") % 11 === 3),
       "embeddings" -> (col("vec_id") % 13 === 5),
       "orders" -> (col("o_orderkey") % 17 === 7))
-    T.tableNames.foreach { t =>
-      val corrupted = T(spark, corruptDir, t)
-      val out = exactResidues.get(t) match {
+    val dir = fixture("graft_mixeddup", corruptDir) { (t, corrupted) =>
+      exactResidues.get(t) match {
         case Some(pred) => corrupted.unionAll(T(spark, sfDir, t).filter(pred))
         case None => corrupted
       }
-      out.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
     }
-    SessionMemo.clear(spark)
     val audit = run("q_constraint_audit", dir)
       .select("constraint_name", "n_violations", "pass")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
@@ -155,7 +135,7 @@ class KeyCorruptionSpec extends SparkSpec {
     val failures = names.flatMap { n =>
       def once(): Seq[String] = {
         SessionMemo.clear(spark)
-        run(n, corruptDir).collect().map(_.toString).sorted.toSeq
+        AxisMatrix.rows(run(n, corruptDir))
       }
       val (a, b) = (once(), once())
       if (a == b) None else Some(s"$n: ${a.size} vs ${b.size} rows, first diff " +
@@ -172,7 +152,7 @@ class KeyCorruptionSpec extends SparkSpec {
     // with a different physical row order/partition layout would flip a
     // winner. Hash-repartitioned rewrite = different file layout and
     // intra-partition order than the coalesce(1) original.
-    val dir = java.nio.file.Files.createTempDirectory("graft_keycorrupt_relayout").toString
+    val dir = tempDir("graft_keycorrupt_relayout")
     T.tableNames.foreach { t =>
       val keyCol = T(spark, corruptDir, t).columns.head
       T(spark, corruptDir, t).repartition(7, col(keyCol))
@@ -194,7 +174,7 @@ class KeyCorruptionSpec extends SparkSpec {
       "llm_e2_semdedup", "llm_e4_mincount_prune").foreach { n =>
       def dump(d: String): Seq[String] = {
         SessionMemo.clear(spark)
-        run(n, d).collect().map(_.toString).sorted.toSeq
+        AxisMatrix.rows(run(n, d))
       }
       withClue(n) { dump(dir) shouldBe dump(corruptDir) }
     }
@@ -216,21 +196,19 @@ class KeyCorruptionSpec extends SparkSpec {
         .withColumn("value", col("value") + 1000.0)
       order(base.unionAll(corrupt))
     }
-    val dirA = java.nio.file.Files.createTempDirectory("graft_samets_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_samets_b").toString
-    T.tableNames.foreach { t =>
-      val a = if (t == "events") events(identity) else T(spark, sfDir, t)
-      val b = if (t == "events") events(_.sortWithinPartitions(col("value").desc_nulls_last))
-              else T(spark, sfDir, t)
-      a.coalesce(1).write.mode("overwrite").parquet(s"$dirA/$t.parquet")
-      b.coalesce(1).write.mode("overwrite").parquet(s"$dirB/$t.parquet")
+    val dirA = fixture("graft_samets_a") {
+      case ("events", _) => events(identity)
+      case (_, base) => base
     }
-    SessionMemo.clear(spark)
+    val dirB = fixture("graft_samets_b") {
+      case ("events", _) => events(_.sortWithinPartitions(col("value").desc_nulls_last))
+      case (_, base) => base
+    }
     Seq("e5_forward_fill", "e5_asof_purchase_last_click",
       "e5_asof_nearest_click").foreach { n =>
       def dump(d: String): Seq[String] = {
         SessionMemo.clear(spark)
-        run(n, d).collect().map(_.toString).sorted.toSeq
+        AxisMatrix.rows(run(n, d))
       }
       withClue(n) { dump(dirB) shouldBe dump(dirA) }
     }
@@ -243,9 +221,8 @@ class KeyCorruptionSpec extends SparkSpec {
     // picks the same winner regardless of partitioning or build order
     val dirA = corruptDir
     val dirB = buildCorruptDir()
-    def ingest(d: String) = run("mm_binary_ingest", d)
-      .select("media_id", "n_bytes", "content_md5")
-      .collect().map(_.toString).sorted.toSeq
+    def ingest(d: String) = AxisMatrix.rows(run("mm_binary_ingest", d)
+      .select("media_id", "n_bytes", "content_md5"))
     val (a, b) = (ingest(dirA), ingest(dirB))
     withClue("blob store content diverged between identical corpora") { a shouldBe b }
     // and the corrupted ids resolve to exactly one object each — the

@@ -33,10 +33,10 @@ import org.apache.spark.sql.functions._
   *    within the documented envelope. This is exactly why the query
   *    is rows-only in the oracle gate.
   */
-class LayoutDriftSpec extends SparkSpec {
+class LayoutDriftSpec extends SparkSpec with AxisMatrix {
 
   private lazy val layoutRoot: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout_spec").toString
+    val dir = tempDir("graft_layout_spec")
     LayoutGen.generate(spark, sfDir, dir, Seq("shards", "hive"))
     dir
   }
@@ -45,20 +45,8 @@ class LayoutDriftSpec extends SparkSpec {
 
   test("every registry query is layout-invariant: shards and hive layouts match the single-file original") {
     val layouts = Seq("shards", "hive").map(l => l -> s"$layoutRoot/$l")
-    val failures = Registry.all.filterNot(_.name == sketchException).flatMap { q =>
-      try {
-        val base = q.run(spark, sfDir).collect().map(_.toString).sorted.toSeq
-        layouts.flatMap { case (l, dir) =>
-          val got = q.run(spark, dir).collect().map(_.toString).sorted.toSeq
-          if (got == base) None
-          else Some(s"${q.name} on $l: ${got.size} vs ${base.size} rows, first diff " +
-            got.zip(base).find { case (a, b) => a != b }.map(_.toString())
-              .getOrElse("size"))
-        }
-      } catch {
-        case e: Throwable =>
-          Seq(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
+    val failures = sweep(except = Set(sketchException)) { q =>
+      layouts.flatMap { case (l, dir) => sameRows(q, dir).map(d => s"on $l: $d") }
     }
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
@@ -94,15 +82,5 @@ class LayoutDriftSpec extends SparkSpec {
         }
       }
     }
-  }
-
-  override protected def afterAll(): Unit = {
-    val p = java.nio.file.Paths.get(layoutRoot)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    super.afterAll()
   }
 }

@@ -38,65 +38,49 @@ import org.apache.spark.sql.functions._
   * engine side: the injected fixture, every query end-to-end, plus the
   * contract pins.
   */
-class NonFiniteInputSpec extends SparkSpec {
+class NonFiniteInputSpec extends SparkSpec with AxisMatrix {
 
   private val nan = lit(Double.NaN)
   private val pinf = lit(Double.PositiveInfinity)
   private val ninf = lit(Double.NegativeInfinity)
 
-  private lazy val nfDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nonfinite").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val poisoned = t match {
-        case "events" => base.withColumn("value",
-          when(col("event_id") % 19 === 4, nan)
-            .when(col("event_id") % 23 === 7, pinf)
-            .when(col("event_id") % 29 === 11, ninf)
-            // finite but beyond the DECIMAL(18,2) money capacity —
-            // DuckDB throws at the cast even under an isfinite guard,
-            // and the old long-grid share quantization overflowed, so
-            // T.moneyRange bounds magnitude too (1e16 is the first
-            // non-representable value; 1e20 crashed the gate)
-            .when(col("event_id") % 37 === 5, lit(1e20))
-            .when(col("event_id") % 41 === 7, lit(-3.7e18))
-            .when(col("event_id") % 43 === 13, lit(1e16))
-            // IN money range but beyond the attribution share-quant
-            // domain (value*1e8 >= 2^53): exact-decimal sums keep it,
-            // the quantized share treats it as missing — past 2^53 the
-            // integral-double→decimal cast diverges cross-engine
-            // (Spark shortest-round-trip digits vs DuckDB exact binary)
-            .when(col("event_id") % 47 === 9, lit(5.4321e9))
-            .otherwise(col("value")))
-        case "embeddings" => base.withColumn("embedding",
-          when(col("vec_id") % 19 === 4,
-            expr("transform(embedding, (x, i) -> IF(i = 0, CAST('NaN' AS FLOAT), x))"))
-            .when(col("vec_id") % 23 === 7,
-              expr("transform(embedding, (x, i) -> IF(i = 1, CAST('Infinity' AS FLOAT), x))"))
-            // a null SLOT (not a null vector): the case where the exists()
-            // HOF and DuckDB's list_filter used to reach OPPOSITE
-            // indexability verdicts — VecIndexable + the `x IS NULL` oracle
-            // arm pin it to NOT INDEXABLE on both sides
-            .when(col("vec_id") % 29 === 3,
-              expr("transform(embedding, (x, i) -> IF(i = 2, CAST(NULL AS FLOAT), x))"))
-            .otherwise(col("embedding")))
-        case _ => base
-      }
-      poisoned.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private lazy val nfDir: String = fixture("graft_nonfinite") {
+    case ("events", base) => base.withColumn("value",
+      when(col("event_id") % 19 === 4, nan)
+        .when(col("event_id") % 23 === 7, pinf)
+        .when(col("event_id") % 29 === 11, ninf)
+        // finite but beyond the DECIMAL(18,2) money capacity —
+        // DuckDB throws at the cast even under an isfinite guard,
+        // and the old long-grid share quantization overflowed, so
+        // T.moneyRange bounds magnitude too (1e16 is the first
+        // non-representable value; 1e20 crashed the gate)
+        .when(col("event_id") % 37 === 5, lit(1e20))
+        .when(col("event_id") % 41 === 7, lit(-3.7e18))
+        .when(col("event_id") % 43 === 13, lit(1e16))
+        // IN money range but beyond the attribution share-quant
+        // domain (value*1e8 >= 2^53): exact-decimal sums keep it,
+        // the quantized share treats it as missing — past 2^53 the
+        // integral-double→decimal cast diverges cross-engine
+        // (Spark shortest-round-trip digits vs DuckDB exact binary)
+        .when(col("event_id") % 47 === 9, lit(5.4321e9))
+        .otherwise(col("value")))
+    case ("embeddings", base) => base.withColumn("embedding",
+      when(col("vec_id") % 19 === 4,
+        expr("transform(embedding, (x, i) -> IF(i = 0, CAST('NaN' AS FLOAT), x))"))
+        .when(col("vec_id") % 23 === 7,
+          expr("transform(embedding, (x, i) -> IF(i = 1, CAST('Infinity' AS FLOAT), x))"))
+        // a null SLOT (not a null vector): the case where the exists()
+        // HOF and DuckDB's list_filter used to reach OPPOSITE
+        // indexability verdicts — VecIndexable + the `x IS NULL` oracle
+        // arm pin it to NOT INDEXABLE on both sides
+        .when(col("vec_id") % 29 === 3,
+          expr("transform(embedding, (x, i) -> IF(i = 2, CAST(NULL AS FLOAT), x))"))
+        .otherwise(col("embedding")))
+    case (_, base) => base
   }
 
   test("all registry queries execute on the non-finite-injected corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, nfDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(nfDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 

@@ -32,39 +32,23 @@ import org.apache.spark.sql.functions._
   * engine side: the nulled fixture, every query end-to-end, plus the
   * four contract pins.
   */
-class NullInputSpec extends SparkSpec {
+class NullInputSpec extends SparkSpec with AxisMatrix {
 
-  private lazy val nullDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_nulls").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val nulled = t match {
-        case "documents" => base.withColumn("text",
-          when(col("doc_id") % 13 === 3, lit(null)).otherwise(col("text")))
-        case "events" => base
-          .withColumn("props",
-            when(col("event_id") % 11 === 5, lit(null)).otherwise(col("props")))
-          .withColumn("value",
-            when(col("event_id") % 7 === 2, lit(null)).otherwise(col("value")))
-        case "embeddings" => base.withColumn("embedding",
-          when(col("vec_id") % 17 === 2, lit(null)).otherwise(col("embedding")))
-        case _ => base
-      }
-      nulled.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private lazy val nullDir: String = fixture("graft_nulls") {
+    case ("documents", base) => base.withColumn("text",
+      when(col("doc_id") % 13 === 3, lit(null)).otherwise(col("text")))
+    case ("events", base) => base
+      .withColumn("props",
+        when(col("event_id") % 11 === 5, lit(null)).otherwise(col("props")))
+      .withColumn("value",
+        when(col("event_id") % 7 === 2, lit(null)).otherwise(col("value")))
+    case ("embeddings", base) => base.withColumn("embedding",
+      when(col("vec_id") % 17 === 2, lit(null)).otherwise(col("embedding")))
+    case (_, base) => base
   }
 
   test("all registry queries execute on the null-injected corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, nullDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(nullDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 

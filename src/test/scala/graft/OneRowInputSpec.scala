@@ -20,27 +20,12 @@ import org.apache.spark.sql.functions._
   *    (GREATEST on both sides), so degenerate groups emit NULL
   *    correlation via the existing NULLIF discipline.
   */
-class OneRowInputSpec extends SparkSpec {
+class OneRowInputSpec extends SparkSpec with AxisMatrix {
 
-  private lazy val oneDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_onerow").toString
-    T.tableNames.foreach { t =>
-      T(spark, sfDir, t).limit(1)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
-  }
+  private lazy val oneDir: String = fixture("graft_onerow")((_, base) => base.limit(1))
 
   test("all registry queries execute on the one-row corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, oneDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(oneDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 

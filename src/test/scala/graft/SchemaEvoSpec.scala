@@ -27,14 +27,7 @@ import org.apache.spark.sql.types.{LongType, StringType}
   * half is the §2b-e gate (make_fixtures.py `schemaevo` +
   * Verify + check.py); this spec pins the engine side.
   */
-class SchemaEvoSpec extends SparkSpec {
-
-  private def rmrf(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-  }
+class SchemaEvoSpec extends SparkSpec with AxisMatrix {
 
   /** Write `df` as ONE parquet file named `name` inside table dir `d`
     * (via a scratch write + move — Spark controls its own part names). */
@@ -53,14 +46,14 @@ class SchemaEvoSpec extends SparkSpec {
       }
     }
     require(moved, s"no parquet file written for $d/$name")
-    rmrf(java.nio.file.Paths.get(scratch))
+    AxisMatrix.delete(scratch)
   }
 
   /** In-JVM twin of the make_fixtures recipe: documents loses `source`
     * and events loses `props` in the older (first-sorting) file; the
     * split is key parity so both halves are non-empty and deterministic. */
   private lazy val evoDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_schemaevo").toString
+    val dir = tempDir("graft_schemaevo")
     val late = Map("documents" -> ("source", "doc_id"), "events" -> ("props", "event_id"))
     T.tableNames.foreach { t =>
       val base = T(spark, sfDir, t)
@@ -81,16 +74,9 @@ class SchemaEvoSpec extends SparkSpec {
 
   /** The explicit twin: SAME rows, the late column materialized as real
     * NULLs in one uniform-schema file — what the evolved dir must be
-    * indistinguishable from. */
-  private lazy val twinDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_schemaevo_twin").toString
-    // build from the EVOLVED read so the two dirs carry identical rows
-    T.tableNames.foreach { t =>
-      T(spark, evoDir, t).coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
-  }
+    * indistinguishable from. Built from the EVOLVED read so the two
+    * dirs carry identical rows. */
+  private lazy val twinDir: String = fixture("graft_schemaevo_twin", evoDir)((_, base) => base)
 
   test("the union read surfaces the late column: old rows null, new rows carry values") {
     val docs = T(spark, evoDir, "documents")
@@ -105,7 +91,7 @@ class SchemaEvoSpec extends SparkSpec {
   }
 
   test("a declared column missing from EVERY file reads as a typed all-null column, in contract order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_schemaevo_all").toString
+    val dir = tempDir("graft_schemaevo_all")
     spark.read.parquet(s"$sfDir/documents.parquet").drop("source")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     SessionMemo.clear(spark)
@@ -122,7 +108,7 @@ class SchemaEvoSpec extends SparkSpec {
     * int64 in the newer — unmergeable by footer union, absorbed by the
     * declared-schema fallback read. */
   private lazy val widthDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_widthevo").toString
+    val dir = tempDir("graft_widthevo")
     val narrow = Map("documents" -> Seq("doc_id", "n_chars"),
       "events" -> Seq("event_id", "user_id"))
     T.tableNames.foreach { t =>
@@ -159,30 +145,12 @@ class SchemaEvoSpec extends SparkSpec {
   }
 
   test("every registry query is byte-identical on the width-evolved dir vs the uniform original") {
-    val diffs = Registry.all.flatMap { q =>
-      try {
-        val a = q.run(spark, widthDir)
-        val b = q.run(spark, sfDir)
-        val only = a.exceptAll(b).count() + b.exceptAll(a).count()
-        if (only == 0) None else Some(s"${q.name}: $only rows differ")
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val diffs = sweep()(q => sameRows(q, widthDir).toSeq)
     withClue(diffs.mkString("\n")) { diffs shouldBe empty }
   }
 
   test("every registry query is byte-identical on the evolved dir vs its explicit-null twin") {
-    val diffs = Registry.all.flatMap { q =>
-      try {
-        val a = q.run(spark, evoDir)
-        val b = q.run(spark, twinDir)
-        val only = a.exceptAll(b).count() + b.exceptAll(a).count()
-        if (only == 0) None else Some(s"${q.name}: $only rows differ")
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val diffs = sweep()(q => sameRows(q, evoDir, twinDir).toSeq)
     withClue(diffs.mkString("\n")) { diffs shouldBe empty }
   }
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * engine side: the no-throw sweep (spine op on the gated view), the
   * rule's residue coverage, and the hazard arithmetic on raw data.
   */
-class TimeExtremeSpec extends SparkSpec {
+class TimeExtremeSpec extends SparkSpec with AxisMatrix {
 
   private def usOf(s: String): Long = java.time.Instant.parse(s).toEpochMilli * 1000L
 
@@ -38,54 +38,37 @@ class TimeExtremeSpec extends SparkSpec {
   private val nsMaxUs = 9223372036854775L - 7  // floor(ns Long.Max/1000)-7
 
   /** Mirrors the PLANS.md pyarrow recipe: event_id%53 residues. */
-  private lazy val txDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_timex").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val mutated = t match {
-        case "events" =>
-          val r = col("event_id") % 53
-          base.withColumn("ts", timestamp_micros(
-            when(r === 11, lit(0L))
-              .when(r === 17, lit(-1L))
-              .when(r === 23, lit(usOf("1969-07-20T20:17:40Z") + 123456L))
-              .when(r === 29, lit(nsMinUs))
-              .when(r === 31, lit(nsMaxUs))
-              .when(r === 37, lit(usOf("2196-02-29T23:59:59Z") + 999999L))
-              .when(r === 41, lit(usOf("1900-01-01T00:00:00Z")))
-              .otherwise(unix_micros(col("ts")))))
-        case "orders" =>
-          val r = col("o_orderkey") % 59
-          base.withColumn("o_orderdate", timestamp_micros(
-            when(r === 13, lit(usOf("1901-12-13T00:00:00Z")))
-              .when(r === 19, lit(usOf("2262-04-11T00:00:00Z")))
-              .when(r === 23, lit(-1L))
-              .otherwise(unix_micros(col("o_orderdate").cast("timestamp"))))
-            .cast(org.apache.spark.sql.types.TimestampNTZType))
-        case _ => base
-      }
-      mutated.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private lazy val txDir: String = fixture("graft_timex") {
+    case ("events", base) =>
+      val r = col("event_id") % 53
+      base.withColumn("ts", timestamp_micros(
+        when(r === 11, lit(0L))
+          .when(r === 17, lit(-1L))
+          .when(r === 23, lit(usOf("1969-07-20T20:17:40Z") + 123456L))
+          .when(r === 29, lit(nsMinUs))
+          .when(r === 31, lit(nsMaxUs))
+          .when(r === 37, lit(usOf("2196-02-29T23:59:59Z") + 999999L))
+          .when(r === 41, lit(usOf("1900-01-01T00:00:00Z")))
+          .otherwise(unix_micros(col("ts")))))
+    case ("orders", base) =>
+      val r = col("o_orderkey") % 59
+      base.withColumn("o_orderdate", timestamp_micros(
+        when(r === 13, lit(usOf("1901-12-13T00:00:00Z")))
+          .when(r === 19, lit(usOf("2262-04-11T00:00:00Z")))
+          .when(r === 23, lit(-1L))
+          .otherwise(unix_micros(col("o_orderdate").cast("timestamp"))))
+        .cast(org.apache.spark.sql.types.TimestampNTZType))
+    case (_, base) => base
   }
 
   /** The gated twin: txDir with quarantinable events removed — what
     * the spine operators see in a gated deployment. */
-  private lazy val gatedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_timex_gated").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, txDir, t)
-      val out =
-        if (t == "events")
-          graft.streaming.EventStreams.withViolations(base)
-            .filter(org.apache.spark.sql.functions.size(col("violations")) === 0)
-            .drop("violations")
-        else base
-      out.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private lazy val gatedDir: String = fixture("graft_timex_gated", txDir) {
+    case ("events", base) =>
+      graft.streaming.EventStreams.withViolations(base)
+        .filter(org.apache.spark.sql.functions.size(col("violations")) === 0)
+        .drop("violations")
+    case (_, base) => base
   }
 
   // MIN/MAX-spine ops: output cardinality is clock-range-proportional.
@@ -95,15 +78,7 @@ class TimeExtremeSpec extends SparkSpec {
   private val spineOps = Set("e5_time_spine_gapfill", "e5_rolling_dau_wau")
 
   test("all registry queries execute on the extreme-timestamp corpus (spine ops on the gated twin)") {
-    val failures = Registry.all.flatMap { q =>
-      val dir = if (spineOps(q.name)) gatedDir else txDir
-      try {
-        q.run(spark, dir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(txDir, route = spineOps.map(_ -> gatedDir).toMap)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 
@@ -136,8 +111,7 @@ class TimeExtremeSpec extends SparkSpec {
     // row materializes, so the cost is one events scan, not the grid
     for (op <- Seq("e5_time_spine_gapfill", "e5_rolling_dau_wau")) {
       val e = intercept[Exception] {
-        Registry.byName(op).run(spark, txDir)
-          .write.format("noop").mode("overwrite").save()
+        AxisMatrix.drain(Registry.byName(op).run(spark, txDir))
       }
       val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .take(8).flatMap(t => Option(t.getMessage)).mkString("\n")
@@ -155,24 +129,15 @@ class TimeExtremeSpec extends SparkSpec {
     // hour span is EXACTLY the configured cap, then exactly one more
     import spark.implicits._
     val capHours = 48L
-    def dirSpanning(hours: Long): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_spinecap").toString
-      T.tableNames.foreach { t =>
-        val base = T(spark, sfDir, t)
-        val out =
-          if (t != "events") base
-          else {
-            // first event at hour 0, last at hour (hours-1): dense-hour
-            // span = `hours` buckets inclusive
-            val loUs = 1705320000000000L // 2024-01-15T12:00:00Z
-            val hiUs = loUs + (hours - 1) * 3600000000L
-            base.withColumn("ts", timestamp_micros(
-              when(col("event_id") % 2 === 0, lit(loUs)).otherwise(lit(hiUs))))
-          }
-        out.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-      }
-      SessionMemo.clear(spark)
-      dir
+    def dirSpanning(hours: Long): String = fixture("graft_spinecap") {
+      case ("events", base) =>
+        // first event at hour 0, last at hour (hours-1): dense-hour
+        // span = `hours` buckets inclusive
+        val loUs = 1705320000000000L // 2024-01-15T12:00:00Z
+        val hiUs = loUs + (hours - 1) * 3600000000L
+        base.withColumn("ts", timestamp_micros(
+          when(col("event_id") % 2 === 0, lit(loUs)).otherwise(lit(hiUs))))
+      case (_, base) => base
     }
     spark.conf.set("graft.spine.maxHours", capHours.toString)
     try {
@@ -180,9 +145,8 @@ class TimeExtremeSpec extends SparkSpec {
         .run(spark, dirSpanning(capHours))
       atCap.select(countDistinct(col("hour_bucket"))).as[Long].head() shouldBe capHours
       val e = intercept[Exception] {
-        Registry.byName("e5_time_spine_gapfill")
-          .run(spark, dirSpanning(capHours + 1))
-          .write.format("noop").mode("overwrite").save()
+        AxisMatrix.drain(Registry.byName("e5_time_spine_gapfill")
+          .run(spark, dirSpanning(capHours + 1)))
       }
       val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .take(8).flatMap(t => Option(t.getMessage)).mkString("\n")

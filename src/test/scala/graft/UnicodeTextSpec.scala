@@ -39,44 +39,28 @@ import org.apache.spark.sql.functions._
   * engine side: the injected fixture, every query end-to-end, plus
   * unit pins for the three contracts.
   */
-class UnicodeTextSpec extends SparkSpec {
+class UnicodeTextSpec extends SparkSpec with AxisMatrix {
 
   import spark.implicits._
 
-  private lazy val uniDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_unicode").toString
-    T.tableNames.foreach { t =>
-      val base = T(spark, sfDir, t)
-      val mutated = t match {
-        case "documents" =>
-          val r = col("doc_id") % 31
-          base.withColumn("text",
-            when(col("text").isNull, col("text"))
-              .when(r === 1, concat(lit("İstanbul straße "), col("text"), lit(" ΣΟΦΟΣ DESS")))
-              .when(r === 5, concat(lit("\u3000  "), regexp_replace(col("text"), ",", ",\u3000"), lit("  \u3000")))
-              .when(r === 9, concat(lit("👩‍🚀 "), col("text"), lit(" 🚀👨‍👩‍👧")))
-              .when(r === 13, concat(lit("café "), col("text"), lit(" élève")))
-              .when(r === 17, concat(lit("tab\there "), col("text"), lit(" zero\u200Bwidth")))
-              .when(r === 21, concat(col("text"), lit(" with\nembedded\nnewlines\r\nand cr")))
-              .when(r === 25, lit("\u3000 \u200B"))
-              .otherwise(col("text")))
-        case _ => base
-      }
-      mutated.coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    }
-    SessionMemo.clear(spark)
-    dir
+  private lazy val uniDir: String = fixture("graft_unicode") {
+    case ("documents", base) =>
+      val r = col("doc_id") % 31
+      base.withColumn("text",
+        when(col("text").isNull, col("text"))
+          .when(r === 1, concat(lit("İstanbul straße "), col("text"), lit(" ΣΟΦΟΣ DESS")))
+          .when(r === 5, concat(lit("\u3000  "), regexp_replace(col("text"), ",", ",\u3000"), lit("  \u3000")))
+          .when(r === 9, concat(lit("👩‍🚀 "), col("text"), lit(" 🚀👨‍👩‍👧")))
+          .when(r === 13, concat(lit("café "), col("text"), lit(" élève")))
+          .when(r === 17, concat(lit("tab\there "), col("text"), lit(" zero\u200Bwidth")))
+          .when(r === 21, concat(col("text"), lit(" with\nembedded\nnewlines\r\nand cr")))
+          .when(r === 25, lit("\u3000 \u200B"))
+          .otherwise(col("text")))
+    case (_, base) => base
   }
 
   test("all registry queries execute on the unicode-injected corpus") {
-    val failures = Registry.all.flatMap { q =>
-      try {
-        q.run(spark, uniDir).write.format("noop").mode("overwrite").save()
-        None
-      } catch {
-        case e: Throwable => Some(s"${q.name}: ${e.getMessage.linesIterator.next()}")
-      }
-    }
+    val failures = survives(uniDir)
     withClue(failures.mkString("\n")) { failures shouldBe empty }
   }
 
