@@ -217,14 +217,11 @@ object T {
     * 1.7 s, q_corr_matrix 1.9 → 1.5 s (same-JVM interleaved A/B ×3,
     * identical results). Those sites call this; nothing else does.
     *
-    * The guard is LAYOUT-derived, not scale-tuned. It fires only when
-    * BOTH strict comparisons hold:
-    *  - `parts * 2 < defaultParallelism`, where `parts` is the input's
-    *    partition count (so the same code adapts to any core count;
-    *    exactly half the cores does not fire);
-    *  - the optimized plan's stats `sizeInBytes > minBytes`, where
-    *    minBytes is graft.read.rebalanceMinBytes, default 512 KiB
-    *    (exactly 512 KiB does not fire).
+    * The guard is LAYOUT-derived, not scale-tuned: [[rebalanceFires]]
+    * over the input's partition count, `defaultParallelism` and the
+    * optimized plan's stats `sizeInBytes`. `force` overrides the guard
+    * (Some(true) always rebalances, Some(false) never) so a caller can
+    * A/B the two plans on the same input.
     * PRECONDITION: `df` must be free of exchanges (a scan plus narrow
     * operators). `parts` is read from `df.rdd`, which after a shuffle
     * is the post-shuffle count, not the scan's, so the guard would
@@ -234,18 +231,26 @@ object T {
     * sort-before-repartition retry determinism, and every registry
     * result is partition-invariant by construction (Verify's local[7]
     * invariance audit is the gate). */
-  def scanRebalanced(spark: SparkSession, df: DataFrame): DataFrame = {
+  def scanRebalanced(spark: SparkSession, df: DataFrame,
+      force: Option[Boolean] = None): DataFrame = {
     if (df.isStreaming) return df // no partition probe on streaming plans
-    if (!spark.conf.get("graft.read.rebalance", "true").toBoolean) return df
     val cores = spark.sparkContext.defaultParallelism
-    val minBytes = spark.conf.get("graft.read.rebalanceMinBytes",
-      (512L * 1024).toString).toLong
-    val parts = df.rdd.getNumPartitions // plans only; no job
-    if (parts * 2 < cores &&
-        df.queryExecution.optimizedPlan.stats.sizeInBytes > minBytes)
-      df.repartition(cores)
-    else df
+    val fires = force.getOrElse(rebalanceFires(
+      df.rdd.getNumPartitions, // plans only; no job
+      cores, df.queryExecution.optimizedPlan.stats.sizeInBytes))
+    if (fires) df.repartition(cores) else df
   }
+
+  /** Inputs of at most this many plan-stats bytes never rebalance. */
+  val RebalanceMinBytes: Long = 512L * 1024
+
+  /** The [[scanRebalanced]] guard; both comparisons are strict:
+    *  - `parts * 2 < cores`, so the same code adapts to any core count
+    *    and exactly half the cores does not fire;
+    *  - `sizeInBytes > RebalanceMinBytes`, so exactly 512 KiB does not
+    *    fire. */
+  def rebalanceFires(parts: Int, cores: Int, sizeInBytes: BigInt): Boolean =
+    parts * 2 < cores && sizeInBytes > RebalanceMinBytes
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     SessionMemo.value(spark, dir, s"table:$name") {

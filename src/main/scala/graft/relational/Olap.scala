@@ -2,6 +2,7 @@ package graft.relational
 
 import graft.{GraftQuery, T}
 import graft.T.{money, sqlDec2Dbl, sqlMoney}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -146,22 +147,27 @@ object Olap {
       FROM lineitem
       GROUP BY l_returnflag
       ORDER BY l_returnflag"""),
-    (s, dir) =>
-      // layout-adaptive scan rebalance (T.scanRebalanced — opt-in, no-op
-      // at production row-group counts): the canonical-string render +
-      // md5 + hex→decimal conversion above this scan is the heavy map
-      // work of the query, and the driver testdata's single-row-group
-      // files would otherwise run it all on one core. Projected to the
-      // 6 consumed columns BEFORE the exchange so only those bytes
-      // shuffle (guide §2.3). Measured 2.5 → 1.6 s at sf0.1/local[32],
-      // identical checksums.
-      T.scanRebalanced(s, T(s, dir, "lineitem").select(
-          col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-          col("l_linestatus"), col("l_extendedprice"), col("l_shipdate")))
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(liRowHash).cast("string").as("checksum"))
-        .orderBy("l_returnflag"))
+    (s, dir) => tableFingerprint(s, dir))
+
+  /** The q_table_fingerprint plan; `force` overrides the rebalance
+    * guard (see [[T.scanRebalanced]]). */
+  def tableFingerprint(s: SparkSession, dir: String,
+      force: Option[Boolean] = None): DataFrame =
+    // layout-adaptive scan rebalance (T.scanRebalanced — opt-in, no-op
+    // at production row-group counts): the canonical-string render +
+    // md5 + hex→decimal conversion above this scan is the heavy map
+    // work of the query, and the driver testdata's single-row-group
+    // files would otherwise run it all on one core. Projected to the
+    // 6 consumed columns BEFORE the exchange so only those bytes
+    // shuffle (guide §2.3). Measured 2.5 → 1.6 s at sf0.1/local[32],
+    // identical checksums.
+    T.scanRebalanced(s, T(s, dir, "lineitem").select(
+        col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
+        col("l_linestatus"), col("l_extendedprice"), col("l_shipdate")), force)
+      .groupBy(col("l_returnflag"))
+      .agg(count(lit(1)).as("n_rows"),
+        sum(liRowHash).cast("string").as("checksum"))
+      .orderBy("l_returnflag")
 
   /** Fingerprint DRILLDOWN — the merkle-style second step of the copy
     * validation: when the table-level checksums disagree, both sides

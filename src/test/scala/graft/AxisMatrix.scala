@@ -1,26 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 
 /** The degenerate-axis sweep: one fixture writer, one registry-wide
   * no-throw sweep and one row-identity check for the specs that run
-  * the registry on a degenerate corpus. The dirs a spec creates here
-  * are deleted when that spec ends. */
+  * the registry on a degenerate corpus. Fixture dirs come from
+  * `SparkSpec.tempDir`, so they are deleted when the spec ends. */
 trait AxisMatrix extends SparkSpec {
   import AxisMatrix._
-
-  private val createdDirs = mutable.Buffer.empty[String]
-
-  /** A fresh temp dir, deleted in this spec's afterAll. */
-  protected def tempDir(prefix: String): String = createdDirs.synchronized {
-    val dir = Files.createTempDirectory(prefix).toString
-    createdDirs += dir
-    dir
-  }
 
   /** Every `T.tableNames` table of `src`, rewritten by the axis's
     * per-table recipe as one file per table into a fresh temp dir. */
@@ -68,10 +56,6 @@ trait AxisMatrix extends SparkSpec {
     def on(d: String) = if (d == sfDir) baseline(q) else rows(q.run(spark, d))
     diff(q.name, on(dir), on(reference))
   }
-
-  override protected def afterAll(): Unit =
-    try super.afterAll()
-    finally createdDirs.synchronized { createdDirs.foreach(delete); createdDirs.clear() }
 }
 
 object AxisMatrix {
@@ -100,11 +84,5 @@ object AxisMatrix {
   def failure(name: String, e: Throwable): String = {
     val first = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).filter(_.nonEmpty)
     s"$name: ${first.getOrElse(e.getClass.getName)}"
-  }
-
-  def delete(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
   }
 }

@@ -5,8 +5,9 @@ import scala.jdk.CollectionConverters._
 import AxisMatrix.{diff, failure, rows}
 
 /** The sweep helper's own contracts: failure lines survive any
-  * exception message, the row check compares multisets, and no spec
-  * grows its own sweep or comparator beside the helper. */
+  * exception message, the row check compares multisets, no spec grows
+  * its own sweep or comparator beside the helper, and every temp dir
+  * comes from `SparkSpec.tempDir`. */
 class AxisMatrixSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,16 +32,25 @@ class AxisMatrixSpec extends SparkSpec {
     diff("q", rows(negZero), rows(base)) should not be None
   }
 
-  test("no file in src/test but AxisMatrix runs a noop sink or an exceptAll comparison") {
-    val needles = Seq("format(\"" + "noop\")", "except" + "All(", "linesIterator" + ".next()")
+  /** `<file>: <needle>` for every needle found in a `src/test` Scala file. */
+  private def sites(needles: Seq[String]): Seq[String] = {
     val files = Files.walk(Paths.get("src/test")).iterator.asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
     files should not be empty
-    val sites = for {
+    for {
       p <- files
       text = Files.readString(p)
       n <- needles if text.contains(n)
     } yield s"${(p: Path).getFileName}: $n"
-    sites shouldBe Seq("AxisMatrix.scala: " + needles.head)
+  }
+
+  test("no file in src/test but AxisMatrix runs a noop sink or an exceptAll comparison") {
+    val needles = Seq("format(\"" + "noop\")", "except" + "All(", "linesIterator" + ".next()")
+    sites(needles) shouldBe Seq("AxisMatrix.scala: " + needles.head)
+  }
+
+  test("no file in src/test but SparkSpec creates a temp dir (every spec's dirs are deleted)") {
+    val needle = "createTemp" + "Directory"
+    sites(Seq(needle)) shouldBe Seq("SparkSpec.scala: " + needle)
   }
 }

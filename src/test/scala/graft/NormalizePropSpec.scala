@@ -45,7 +45,7 @@ class NormalizePropSpec extends SparkSpec {
     val params = org.scalacheck.Gen.Parameters.default
     (1 to 25).foreach { i =>
       val acc = accidentGen(params, Seed(42L + i)).get
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_normprop_$i").toString
+      val dir = tempDir(s"graft_normprop_$i")
       // materialize the accident: project to the kept permutation, narrow
       val projected = base.select(acc.keep.map { c =>
         if (acc.narrow && (c == "doc_id" || c == "n_chars")) col(c).cast("int").as(c)

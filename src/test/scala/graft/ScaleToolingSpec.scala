@@ -66,7 +66,7 @@ class ScaleToolingSpec extends SparkSpec {
   }
 
   test("DriftGen axes re-encode the physical schema and T normalizes them back") {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_driftgen_spec_${ProcessHandle.current().pid()}"
+    val out = tempDir("graft_driftgen_spec")
     DriftGen.generate(spark, sfDir, out, Seq("i32", "dec"))
     // the written physical schema IS drifted (raw read)…
     spark.read.parquet(s"$out/i32/orders.parquet")
@@ -124,7 +124,7 @@ class ScaleToolingSpec extends SparkSpec {
     // normalized gate must flag ONLY the real mover and report a 1.00x
     // normalized median.
     import scala.sys.process._
-    val dir = java.nio.file.Files.createTempDirectory("graft_benchdiff_spec")
+    val dir = java.nio.file.Paths.get(tempDir("graft_benchdiff_spec"))
     val qnames = (1 to 9).map(i => s"q$i")
     def detail(mult: Double, calib: Double, extra2x: Boolean): String = {
       val qs = qnames.zipWithIndex.map { case (n, i) =>
@@ -168,16 +168,5 @@ class ScaleToolingSpec extends SparkSpec {
       (raw should not).include("normalized_median")
       raw should include("no query moved >1.5x either way")
     }
-  }
-
-  override protected def afterAll(): Unit = {
-    val p = java.nio.file.Paths.get(
-      s"${sys.props("java.io.tmpdir")}/graft_driftgen_spec_${ProcessHandle.current().pid()}")
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    super.afterAll()
   }
 }

@@ -32,7 +32,7 @@ class SchemaEvoSpec extends SparkSpec with AxisMatrix {
   /** Write `df` as ONE parquet file named `name` inside table dir `d`
     * (via a scratch write + move — Spark controls its own part names). */
   private def writeOneFile(df: org.apache.spark.sql.DataFrame, d: String, name: String): Unit = {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_evo_w").toString
+    val scratch = tempDir("graft_evo_w")
     df.coalesce(1).write.mode("overwrite").parquet(scratch)
     val part = java.nio.file.Files.list(java.nio.file.Paths.get(scratch))
       .iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
@@ -46,7 +46,6 @@ class SchemaEvoSpec extends SparkSpec with AxisMatrix {
       }
     }
     require(moved, s"no parquet file written for $d/$name")
-    AxisMatrix.delete(scratch)
   }
 
   /** In-JVM twin of the make_fixtures recipe: documents loses `source`

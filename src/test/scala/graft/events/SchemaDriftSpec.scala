@@ -16,12 +16,12 @@ import org.apache.spark.sql.types._
   * the normalized frame is identical — so the NEXT regeneration is
   * caught by `sbt test` instead of the round's correctness run.
   *
-  * Scratch dirs are suffixed with the JVM pid so two concurrent test
-  * JVMs on one machine cannot delete each other's fixtures mid-read. */
+  * The scratch root is a fresh temp dir of this spec run, so two
+  * concurrent test JVMs on one machine cannot delete each other's
+  * fixtures mid-read. */
 class SchemaDriftSpec extends SparkSpec {
 
-  private val scratchRoot =
-    s"${sys.props("java.io.tmpdir")}/graft_drift_${ProcessHandle.current().pid()}"
+  private val scratchRoot = tempDir("graft_drift")
 
   /** Write `df` as `<table>.parquet` under a per-variant sfDir-shaped
     * scratch dir and read it back through the T normalizer. */
@@ -270,15 +270,5 @@ class SchemaDriftSpec extends SparkSpec {
     val n = EventAnalytics.events(spark, sfDir)
       .select(unix_micros(col("ts")).as("us")).filter(col("us") > 0L).count()
     n should be > 0L
-  }
-
-  override protected def afterAll(): Unit = {
-    val p = java.nio.file.Paths.get(scratchRoot)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    super.afterAll()
   }
 }

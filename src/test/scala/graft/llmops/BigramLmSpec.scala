@@ -25,7 +25,7 @@ class BigramLmSpec extends SparkSpec {
 
   test("llm_e4_bigram_surprisal: hand-checked on a planted two-doc corpus") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("bigram_fix").toString
+    val tmp = tempDir("bigram_fix")
     // corpus: "a b a b" and "a b c" -> bigrams: (a,b)x3, (b,a)x1, (b,c)x1
     // c1: a->3, b->2; p(b|a)=1, p(a|b)=1/2, p(c|b)=1/2
     Seq((0L, "a b a b"), (1L, "a b c"))

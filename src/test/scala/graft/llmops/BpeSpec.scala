@@ -71,7 +71,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("llm_e4_bpe_merges: exhaustion before k stops the table early") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_bpe_planted"
+    val dir = tempDir("graft_bpe_planted")
     Seq((1L, "ab ab ab cd", "en", "fx", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -82,7 +82,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("llm_e4_bpe_merges: count ties break on (l, r) ascending") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_bpe_ties"
+    val dir = tempDir("graft_bpe_ties")
     Seq((1L, "xy xy xz xz", "en", "fx", 11L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -135,7 +135,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("llm_e4_bpe_encode is total: a wordless doc reports 0/0 with NULL fertility") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_bpe_wordless"
+    val dir = tempDir("graft_bpe_wordless")
     Seq((1L, "ab ab xy", "en", "fx", 8L), (2L, null.asInstanceOf[String], "en", "fx", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

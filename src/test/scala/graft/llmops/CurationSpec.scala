@@ -94,7 +94,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("llm_e4_ccnet_buckets is total: unscorable docs label 'unscored'") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_ccnet_planted"
+    val dir = tempDir("graft_ccnet_planted")
     // doc 99 has a single token -> zero bigrams -> no LM score
     val texts = (0L until 30L).map(d =>
       (d, Seq.fill(12)(Seq("alpha", "beta", "gamma")((d % 3).toInt)).mkString(" "),
@@ -215,7 +215,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("llm_e2_semdedup planted clones: earliest clone kept, clones dropped, singletons kept") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_semdedup_planted"
+    val dir = tempDir("graft_semdedup_planted")
     // basis vectors: distinct ids are exactly orthogonal (cos 0 < tau),
     // clones are exactly parallel (cos 1 >= tau) and land in one cell
     def basis(i: Int): Array[Float] =

@@ -68,7 +68,7 @@ class DsirSpec extends SparkSpec {
 
   test("planted vocabulary: target-looking docs weigh higher than off-target docs") {
     import spark.implicits._
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_dsir"
+    val dir = tempDir("graft_test_dsir")
     // 'en' docs speak one vocabulary, 'xx' docs a disjoint one; a probe
     // doc in each vocabulary carries lang 'zz' so its weight comes only
     // from its CONTENT, not its own lang tag

@@ -20,7 +20,7 @@ class LlmOpsSpec extends SparkSpec {
     * known duplicate structure, written as a parquet dir the queries can
     * read like any sfDir. */
   private lazy val plantedDir: String = {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_planted"
+    val dir = tempDir("graft_test_planted")
     val rnd = new scala.util.Random(7)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta",
       "eta", "theta", "iota", "kappa", "mu", "nu")
@@ -192,7 +192,7 @@ class LlmOpsSpec extends SparkSpec {
     // doc_id), not the k(k-1)/2 pairwise join — this fixture is the
     // regression pin for that contract: 300 copies + 5 distinct docs,
     // every copy labeled with the min id, distinct docs untouched.
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_heavygroup"
+    val dir = tempDir("graft_test_heavygroup")
     val rnd = new scala.util.Random(11)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta",
       "eta", "theta", "iota", "kappa", "mu", "nu")
@@ -300,7 +300,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("long repeats: planted arbitrary-length blocks come out as single maximal runs") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_longrep"
+    val dir = tempDir("graft_test_longrep")
     // unique filler per (doc, position) so NOTHING repeats by accident;
     // shared blocks sa (20 tokens), sb (12 tokens), sc (7 tokens < spanN)
     def fill(d: String, n: Int, from: Int = 0) =
@@ -335,7 +335,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("text scrub masks lexicon terms and redacts planted email/IPv4 patterns") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_scrub"
+    val dir = tempDir("graft_test_scrub")
     Seq(
       (1L, "contact bob@example.com at 10.0.0.1 customer spark says customer", "en", "fixture", 0L),
       (2L, "plain words only here", "en", "fixture", 0L)
@@ -375,7 +375,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("unigram surprisal: rare-token doc scores higher, values match closed form") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_surprisal"
+    val dir = tempDir("graft_test_surprisal")
     Seq(
       (1L, "a a a a", "en", "fixture", 0L),
       (2L, "a a a b", "en", "fixture", 0L)
@@ -392,7 +392,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("repetition ratio: planted repetitive doc scores high, distinct doc zero") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_repetition"
+    val dir = tempDir("graft_test_repetition")
     Seq(
       (1L, "spam spam spam spam spam spam", "en", "fixture", 0L), // 5 bigrams, 1 distinct
       (2L, "one two three four five six", "en", "fixture", 0L)    // all distinct
@@ -408,7 +408,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("chunk windows: 32/24 overlap shape on a 50-token doc") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_chunks"
+    val dir = tempDir("graft_test_chunks")
     val toks = (1 to 50).map(i => s"w$i")
     Seq((1L, toks.mkString(" "), "en", "fixture", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -445,7 +445,7 @@ class LlmOpsSpec extends SparkSpec {
     // df = 20 = 100% of the corpus) followed by a per-doc unique tail —
     // the skew shape where one stop-shingle alone would contribute
     // C(20,2) = 190 candidate pairs with zero near-dup signal
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_hot_shingle"
+    val dir = tempDir("graft_test_hot_shingle")
     (0 until 20).map(i => (i.toLong, s"stop stop stop u$i v$i w$i x$i", "en", "fixture", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -477,7 +477,7 @@ class LlmOpsSpec extends SparkSpec {
     //   corpus 1:"A" 2:"B" 3:"C"
     //   batch  7:"A" (dup_of_corpus)  17:"X" (novel, first of pair)
     //          27:"X" (dup_in_batch)  37:"Y" (novel)  47:"B" (dup_of_corpus)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_incremental"
+    val dir = tempDir("graft_test_incremental")
     Seq(
       (1L, "alpha beta gamma"), (2L, "delta eps zeta"), (3L, "eta theta iota"),
       (7L, "alpha beta gamma"), (17L, "kappa mu nu"), (27L, "kappa mu nu"),
@@ -493,7 +493,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("filter cascade attributes each doc to its FIRST failing rule") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_cascade"
+    val dir = tempDir("graft_test_cascade")
     def rep(w: String, n: Int) = Seq.fill(n)(w)
     val docs = Seq(
       // too short AND stopword-free: r1 must win (cascade order)
@@ -638,7 +638,7 @@ class LlmOpsSpec extends SparkSpec {
     // pin: a duplicate-COMMITTED doc row must not double its
     // (doc_id, shingle) pairs, and the planted exact-dup pair's
     // similarity stays exactly 1.0, the set-math ceiling.
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_test_dupcommit"
+    val dir = tempDir("graft_test_dupcommit")
     val docs = spark.read.parquet(s"$plantedDir/documents.parquet")
     docs.unionAll(docs.filter(col("doc_id") === 0)) // doc 0 committed twice
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -103,7 +103,7 @@ class UnigramLmSpec extends SparkSpec {
   }
 
   test("training ignores non-ascii and over-long words entirely") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_unigram_skip"
+    val dir = tempDir("graft_unigram_skip")
     Seq((1L, "ÅÅÅ 123 superlongword", "en", "fx", 20L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -111,7 +111,7 @@ class UnigramLmSpec extends SparkSpec {
   }
 
   test("a repetitive corpus learns its repeated chunk as a piece") {
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_unigram_rep"
+    val dir = tempDir("graft_unigram_rep")
     Seq((1L, "abab abab abab cd", "en", "fx", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -10,7 +10,7 @@ class ReportSinkSpec extends SparkSpec {
   import spark.implicits._
 
   test("writes one gated report per source with first-row-only blanking") {
-    val out = Files.createTempDirectory("graft_report").toString
+    val out = tempDir("graft_report")
     val ann = Annotate.annotated(Seq(
       (1L, "10, slow big text", "en", "fileA"),
       (2L, "11, clean text", "en", "fileA"),   // no tags
@@ -45,7 +45,7 @@ class ReportSinkSpec extends SparkSpec {
   }
 
   test("PDF output: valid structure, correct page count, gated, text present") {
-    val out = Files.createTempDirectory("graft_report_pdf").toString
+    val out = tempDir("graft_report_pdf")
     // 30 body rows in fileA -> 2 pages at 24/page; fileB stays tagless
     val docs = (1 to 28).map(i => (i.toLong, s"$i, slow entry $i", "en", "fileA")) :+
       (100L, "100, slow big pair", "en", "fileA") :+
@@ -101,7 +101,7 @@ class ReportSinkSpec extends SparkSpec {
   }
 
   test("HTML layout: repeated per-page headers, zebra rows, gating, blanking") {
-    val out = Files.createTempDirectory("graft_report_html").toString
+    val out = tempDir("graft_report_html")
     // 30 single-tag docs in fileA -> 30 body rows -> 2 pages at 24/page;
     // doc 100 has two tags ("slow big") so its second row is blanked
     val docs = (1 to 29).map(i => (i.toLong, s"$i, slow entry $i", "en", "fileA")) :+

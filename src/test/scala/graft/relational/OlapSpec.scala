@@ -141,7 +141,7 @@ class OlapSpec extends SparkSpec {
     // mutate every row of that (orderkey, linenumber) key — the synthetic
     // data reuses line numbers, but all mutated rows share l_orderkey, so
     // the blast radius is still exactly one bucket
-    val tmp = java.nio.file.Files.createTempDirectory("graft_merkle").toString
+    val tmp = tempDir("graft_merkle")
     li.withColumn("l_extendedprice",
         when(col("l_orderkey") === vOrder && col("l_linenumber") === vLine,
           col("l_extendedprice") + 1000.0).otherwise(col("l_extendedprice")))

@@ -64,8 +64,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("foreachBatch incremental merge: versioned state equals the one-shot aggregate") {
     implicit val sqlCtx = spark.sqlContext
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_merge_state").toString
+    val stateDir = tempDir("graft_merge_state")
     val stream = MemoryStream[EventStreams.Event]
     val all = toEvents(batchEvents.collect())
     // three uneven batches: the merge must be split-invariant
@@ -92,8 +91,8 @@ class EventStreamsSpec extends SparkSpec {
 
   test("quality gate routes violating rows to the quarantine with rule names") {
     implicit val sqlCtx = spark.sqlContext
-    val goodDir = java.nio.file.Files.createTempDirectory("graft_gate_good").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("graft_gate_quar").toString
+    val goodDir = tempDir("graft_gate_good")
+    val quarDir = tempDir("graft_gate_quar")
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     // Options so NULLs survive the encoder — planted violations per rule
     val stream = MemoryStream[(Long, Option[java.sql.Timestamp], Option[Long],
@@ -152,8 +151,7 @@ class EventStreamsSpec extends SparkSpec {
 
   test("incremental merge refuses to resume over existing state without a checkpoint") {
     implicit val sqlCtx = spark.sqlContext
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_merge_guard").toString
+    val stateDir = tempDir("graft_merge_guard")
     EventStreams.mergeBatch(batchEvents.limit(5).toDF(), 0L, stateDir)
     val stream = MemoryStream[EventStreams.Event]
     // a fresh query would renumber batches from 0; the v0 short-circuit
@@ -163,8 +161,7 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("incremental merge replay is idempotent and rebuilds over torn writes") {
-    val stateDir = java.nio.file.Files
-      .createTempDirectory("graft_merge_replay").toString
+    val stateDir = tempDir("graft_merge_replay")
     val b0 = batchEvents.filter($"event_id" % 3 === 0).toDF()
     val b1 = batchEvents.filter($"event_id" % 3 === 1).toDF()
     val b2 = batchEvents.filter($"event_id" % 3 === 2).toDF()
@@ -202,8 +199,7 @@ class EventStreamsSpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     for (seed <- 1 to 4) {
       val rnd = new scala.util.Random(seed)
-      val stateDir = java.nio.file.Files
-        .createTempDirectory(s"graft_merge_prop_$seed").toString
+      val stateDir = tempDir(s"graft_merge_prop_$seed")
       val nBatches = 2 + rnd.nextInt(3)
       val batches = (0 until nBatches).map { b =>
         batchEvents.filter($"event_id" % nBatches === b).toDF()
@@ -262,8 +258,8 @@ class EventStreamsSpec extends SparkSpec {
     stream.addData(Seq(EventStreams.Event(-1L,
       java.sql.Timestamp.from(maxTs.toInstant.plusSeconds(48 * 3600)),
       -1L, "sentinel", 0.0, "{}")))
-    val out = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val out = tempDir("graft_sink")
+    val ckpt = tempDir("graft_ckpt")
     val q = EventStreams.startHourlyParquetSink(stream.toDF(), out, ckpt)
     q.processAllAvailable(); q.stop()
 

@@ -14,7 +14,7 @@ class FileStreamSpec extends SparkSpec {
   import spark.implicits._
 
   test("parquet file stream == batch aggregation across per-file micro-batches") {
-    val srcDir = Files.createTempDirectory("graft_stream_src").toString
+    val srcDir = tempDir("graft_stream_src")
     val batch = EventAnalytics.events(spark, sfDir).cache()
     // three files = three micro-batches; hour buckets span all of them
     val parts = batch.randomSplit(Array(1, 1, 1), seed = 5)
@@ -22,7 +22,7 @@ class FileStreamSpec extends SparkSpec {
       p.coalesce(1).write.parquet(s"$srcDir/f$i")
     }
     // readEventStream expects a flat dir of parquet files
-    val flat = Files.createTempDirectory("graft_stream_flat").toString
+    val flat = tempDir("graft_stream_flat")
     var n = 0
     parts.indices.foreach { i =>
       Files.list(java.nio.file.Paths.get(s"$srcDir/f$i")).forEach { f =>
@@ -47,11 +47,11 @@ class FileStreamSpec extends SparkSpec {
   test("file stream absorbs a drifted (NTZ) physical encoding like the batch side") {
     import org.apache.spark.sql.types.TimestampNTZType
     // the round-10 drift shape: timestamp[us] with isAdjustedToUTC=false
-    val driftDir = Files.createTempDirectory("graft_stream_ntz").toString
+    val driftDir = tempDir("graft_stream_ntz")
     EventAnalytics.events(spark, sfDir)
       .withColumn("ts", col("ts").cast(TimestampNTZType))
       .coalesce(1).write.mode("overwrite").parquet(s"$driftDir/files")
-    val flat = Files.createTempDirectory("graft_stream_ntz_flat").toString
+    val flat = tempDir("graft_stream_ntz_flat")
     var n = 0
     Files.list(java.nio.file.Paths.get(s"$driftDir/files")).forEach { f =>
       if (f.toString.endsWith(".parquet")) {

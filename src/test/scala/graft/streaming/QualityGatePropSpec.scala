@@ -85,8 +85,8 @@ class QualityGatePropSpec extends SparkSpec {
   test("a MemoryStream gate run aggregates to exactly the batch-twin audit") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val goodDir = java.nio.file.Files.createTempDirectory("graft_gate_prop_good").toString
-    val quarDir = java.nio.file.Files.createTempDirectory("graft_gate_prop_quar").toString
+    val goodDir = tempDir("graft_gate_prop_good")
+    val quarDir = tempDir("graft_gate_prop_quar")
     val rows = Gen.listOfN(60, evGen)(Gen.Parameters.default, Seed(4242L)).get
       .zipWithIndex.map { case ((ts, uid, et, value), i) =>
         Ev(i.toLong, ts, uid, et, value, "{}")
