@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -311,6 +312,18 @@ object T {
         }
       normalize(spark, name, frame)
     }
+
+  /** [[apply]]'s memoized frame with its file listing renewed. The memo
+    * keeps the listing of the first read, and Spark re-lists a path on
+    * a write or on `spark.catalog.refreshByPath` only for plans in the
+    * cache, so a reader that must see files landed since (a dashboard
+    * refresh) asks for the table through here. */
+  def relisted(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = apply(spark, dir, name)
+    df.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRelation => r.relation }
+      .foreach { case h: HadoopFsRelation => h.location.refresh(); case _ => }
+    df
+  }
 
   /** Locale-proof fixed-decimal rendering for the probes'/bench's JSON
     * lines. The f-interpolator (and argless String.format) format

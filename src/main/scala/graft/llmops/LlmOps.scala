@@ -240,18 +240,6 @@ object LlmOps {
       ORDER BY da, db"""),
     (s, dir) => jaccardPairs(s, dir).orderBy("da", "db"))
 
-  /** Shared-frame memoization — see [[graft.SessionMemo]] for the
-    * ownership/concurrency contract. LlmOps pins: the exact-Jaccard pair
-    * set (jaccard + dedup-cluster queries), the df-capped shingle index
-    * (Jaccard + MinHash), the MinHash candidates, the CC cluster frame,
-    * and the repeated-span index (span index + cut queries). Sites whose
-    * build is a plain persist+count use [[graft.SessionMemo.materialized]];
-    * the rest (custom release logic) call
-    * [[graft.SessionMemo.memoized]]. */
-  private def memoized(s: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame =
-    graft.SessionMemo.memoized(s, dir, key)(build)
-
   /** Unsorted exact-Jaccard pairs (da, db, shared, jaccard) — the
     * verify-facing query adds the deterministic sort; graph consumers
     * (dedup clusters) share the same materialized frame via the memo.
@@ -259,7 +247,7 @@ object LlmOps {
     * per-doc counts); persist materializes it once — at cluster scale
     * this is the standard cached/checkpointed inverted index. */
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "jaccard_pairs") { buildJaccardPairs(s, dir) }
+    graft.SessionMemo.memoized(s, dir, "jaccard_pairs") { buildJaccardPairs(s, dir) }
 
   /** The df-capped shingle index, materialized once per (session, dir) and
     * shared by the exact-Jaccard self-join AND the MinHash signature build
@@ -450,7 +438,7 @@ object LlmOps {
     "llm_e2_minhash_lsh_candidates",
     "MinHash(16) + 8-band LSH bucket join, estimated Jaccard (E2)",
     Some(minhashOracleSql),
-    (s, dir) => memoized(s, dir, "minhash_candidates") {
+    (s, dir) => graft.SessionMemo.memoized(s, dir, "minhash_candidates") {
       // df-capped shingles (shared, memoized index — same jaccardMaxDf cap
       // as the exact-Jaccard twin, so the spec's recall check compares like
       // for like). The signature frame feeds THREE plan branches (the
@@ -928,7 +916,7 @@ object LlmOps {
   }
 
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
-    memoized(s, dir, "dedup_clusters") {
+    graft.SessionMemo.memoized(s, dir, "dedup_clusters") {
       val d = docs(s, dir)
       val exact = exactStarEdges(
         d.select(col("doc_id"), sha2(col("text"), 256).as("content_hash")))

@@ -230,7 +230,13 @@ object Multimodal {
     * file listing (name, size, mtime — driver-side metadata only, no
     * Spark job): regenerated testdata at the same path gets a fresh blob
     * dir instead of silently reusing stale .bin files, and two distinct
-    * dirs can never alias (the old `dir.hashCode` tag allowed both). */
+    * dirs can never alias (the old `dir.hashCode` tag allowed both).
+    * It lives in the per-process scratch tree that
+    * [[graft.GraftSession.release]] deletes, unless SPARK_GRAFT_BLOB_DIR
+    * names a blob root. On a real cluster that root MUST be shared
+    * storage — executors write blobs with local file APIs, so an
+    * executor-local /tmp would leave the driver-side binaryFile scan
+    * seeing none of them. */
   private def binDirFor(dir: String): java.io.File = {
     val src = new java.io.File(s"$dir/documents.parquet")
     val listing =
@@ -239,10 +245,9 @@ object Multimodal {
           .map(f => s"${f.getName}:${f.length}:${f.lastModified}")
       else Seq(s"${src.getName}:${src.length}:${src.lastModified}")
     val sig = (dir +: listing).mkString("|")
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val tag = md.take(8).map(b => f"$b%02x").mkString
-    new java.io.File(s"$blobRoot/graft_binfiles_$tag")
+    new java.io.File(sys.env.get("SPARK_GRAFT_BLOB_DIR")
+      .fold(graft.sources.Formats.scratch(sig, "graft_binfiles"))(
+        root => s"$root/graft_binfiles_${T.scratchKey(sig)}"))
   }
 
   /** Materialize one .bin file per document (content = UTF-8 text bytes)
@@ -251,14 +256,6 @@ object Multimodal {
     * Idempotent: a _DONE marker (written only after the job completes)
     * skips rebuilds; bytes are a pure function of the table, so a lost
     * marker race just rewrites identical files. */
-  /** Blob-dir root: java.io.tmpdir in this single-JVM harness. On a
-    * real cluster this MUST point at shared storage
-    * (SPARK_GRAFT_BLOB_DIR) — executors write blobs with local file
-    * APIs, so an executor-local /tmp would leave the driver-side
-    * binaryFile scan seeing none of them. */
-  private def blobRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_BLOB_DIR", sys.props("java.io.tmpdir"))
-
   private def ensureBinFiles(s: SparkSession, dir: String): String = synchronized {
     val out = binDirFor(dir)
     val marker = new java.io.File(out, "_DONE")

@@ -232,21 +232,6 @@ object Annotate {
     * builds on). */
   def annotated(docs: DataFrame): DataFrame = docs.withColumn("tags", tagsCol(col("text")))
 
-  /** X3 via declarative observed metrics: attach an
-    * [[org.apache.spark.sql.Observation]] to the annotated view and the
-    * driver reads (n_docs, n_tagged, n_tags) after any action on it —
-    * zero extra jobs, metrics ride the existing pass (the accumulator
-    * path in [[annotateBatched]] is the imperative twin for the
-    * mapPartitions route). */
-  def annotatedObserved(docs: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("annotate_metrics")
-    val df = annotated(docs).observe(obs,
-      count(lit(1)).as("n_docs"),
-      sum(when(size(col("tags")) > 0, 1L).otherwise(0L)).as("n_tagged"),
-      sum(size(col("tags"))).as("n_tags"))
-    (df, obs)
-  }
-
   /** X1/X2 execution path: batch rows per language inside each partition
     * and call the annotator trait with retry/skip. Skipped batches emit no
     * rows (the reference writes no output JSON for a skipped file) and are

@@ -2,7 +2,6 @@ package graft.parity
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,14 +29,8 @@ final class Dashboard(spark: SparkSession, dir: String) {
   @volatile private var answers: Answers = load()
 
   private def load(): Answers = {
-    // re-list the source: the frame memoized by graft.T keeps the file
-    // listing of its first read (Spark re-lists a path on a write or
-    // refreshByPath only for plans in the cache), and a refresh must see
-    // the files that landed since
-    val docs = graft.T(spark, dir, "documents")
-    docs.queryExecution.analyzed.collectLeaves().collect { case r: LogicalRelation => r.relation }
-      .foreach { case h: HadoopFsRelation => h.location.refresh(); case _ => }
-    val ann = Annotate.annotated(docs)
+    // a refresh must see the files that landed since the first read
+    val ann = Annotate.annotated(graft.T.relisted(spark, dir, "documents"))
     val (lang, issue, record) = (col("lang"), col("issue_literal"), col("record_literal"))
     // A1: the flatten's tag rows, counted per (lang, issue) and per issue
     val issues = Parity.flatten(ann).filter(issue.isNotNull)

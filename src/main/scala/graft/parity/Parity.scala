@@ -27,10 +27,6 @@ import org.apache.spark.sql.types._
   */
 object Parity {
 
-  /** Deterministic scratch-dir key for a testdata dir — the shared
-    * [[graft.T.scratchKey]] (16 md5 hex chars of the full path). */
-  private def scratchKey(dir: String): String = T.scratchKey(dir)
-
   // ---------------------------------------------------------------------
   // Spark side
   // ---------------------------------------------------------------------
@@ -74,6 +70,25 @@ object Parity {
     when(instr(c, ",") > 0, graft.T.ustrip(expr(s"substring($name, instr($name, ',') + 1)")))
       .otherwise("")
 
+  /** A6's rows: flagged documents only (P2), the first-comma split (P3)
+    * and one row per tag with its position (F3 posexplode; position 0
+    * carries the record keys the reports blank on later rows). The
+    * `a6` query and both [[ReportSink]] renderers read this one
+    * definition; the renderers key their per-file reports on `source`,
+    * and a source with no flagged document yields no row, which is the
+    * reference's skip of an all-clean file (call-debias.py:58-62). */
+  private[parity] def flaggedTags(annotated: DataFrame): DataFrame =
+    annotated.filter(size(col("tags")) > 0)
+      .select(col("source"), col("doc_id"),
+        recordNum(col("text")).as("record_num"),
+        literalText(col("text"), "text").as("literal_text"),
+        posexplode(col("tags")))
+      .select(col("source"), col("doc_id"), col("record_num"), col("literal_text"),
+        col("pos").as("tag_pos"),
+        col("col.literal").as("tag_literal"),
+        col("col.issue").as("tag_issue"),
+        col("col.source").as("tag_source"))
+
   // ---------------------------------------------------------------------
   // Oracle side (DuckDB): shared flatten CTE
   // ---------------------------------------------------------------------
@@ -114,24 +129,29 @@ object Parity {
   // Queries
   // ---------------------------------------------------------------------
 
-  /** A1 "Issue Distribution" (reference dashboard_widget.py:101-113):
-    * tag rows only, group-count by issue_literal, sort count desc. */
-  private val a1 = GraftQuery(
-    "parity_a1_issue_distribution",
-    "flatten -> filter notnull -> group-count -> sort desc (A1/P4/O1)",
-    Some(s"""
+  /** A1 "Issue Distribution" (reference dashboard_widget.py:101-113)
+    * over a flatten frame: tag rows only, group-count by issue_literal,
+    * sort count desc. `issueCountSql` is its oracle over the `flat` CTE
+    * rows that pass `where`. */
+  private def issueCounts(flat: DataFrame): DataFrame =
+    flat.filter(col("issue_literal").isNotNull)
+      .groupBy(col("issue_literal"))
+      .agg(count(lit(1)).as("n_tags"))
+      .orderBy(col("n_tags").desc, col("issue_literal"))
+
+  private def issueCountSql(where: String): String = s"""
       WITH $flatSql
       SELECT issue_literal, count(*) AS n_tags
       FROM flat
-      WHERE issue_literal IS NOT NULL
+      WHERE $where
       GROUP BY issue_literal
-      ORDER BY n_tags DESC, issue_literal"""),
-    (s, dir) =>
-      flat(s, dir)
-        .filter(col("issue_literal").isNotNull)
-        .groupBy(col("issue_literal"))
-        .agg(count(lit(1)).as("n_tags"))
-        .orderBy(col("n_tags").desc, col("issue_literal")))
+      ORDER BY n_tags DESC, issue_literal"""
+
+  private val a1 = GraftQuery(
+    "parity_a1_issue_distribution",
+    "flatten -> filter notnull -> group-count -> sort desc (A1/P4/O1)",
+    Some(issueCountSql("issue_literal IS NOT NULL")),
+    (s, dir) => issueCounts(flat(s, dir)))
 
   /** A2+A3 "Distribution of Issue Count per Record"
     * (reference dashboard_widget.py:166-171): per record max(tag_count)
@@ -179,19 +199,8 @@ object Parity {
   private val a1Filtered = GraftQuery(
     "parity_a1_issue_distribution_en",
     "A1 with the P5 language equality predicate (language='en')",
-    Some(s"""
-      WITH $flatSql
-      SELECT issue_literal, count(*) AS n_tags
-      FROM flat
-      WHERE issue_literal IS NOT NULL AND lang = 'en'
-      GROUP BY issue_literal
-      ORDER BY n_tags DESC, issue_literal"""),
-    (s, dir) =>
-      flat(s, dir)
-        .filter(col("issue_literal").isNotNull && col("lang") === "en")
-        .groupBy(col("issue_literal"))
-        .agg(count(lit(1)).as("n_tags"))
-        .orderBy(col("n_tags").desc, col("issue_literal")))
+    Some(issueCountSql("issue_literal IS NOT NULL AND lang = 'en'")),
+    (s, dir) => issueCounts(flat(s, dir).filter(col("lang") === "en")))
 
   /** A5 payload build (reference call-debias.py:43-48,143-147): all values
     * of one (language, file) group collected into one request payload.
@@ -226,7 +235,7 @@ object Parity {
   /** A6 flagged-entry report (reference call-debias.py:91-110): flagged
     * results only, split-first-comma projection (P3), one row per tag with
     * its position (F3 posexplode; position drives the reference's
-    * first-row-only blanking). */
+    * first-row-only blanking): [[flaggedTags]] less its source. */
   private val a6 = GraftQuery(
     "parity_a6_flagged_report",
     "flagged filter + first-comma split + posexplode tags (A6/F3/P2/P3)",
@@ -248,18 +257,7 @@ object Parity {
       FROM doc_tags t
       ORDER BY t.doc_id, tag_pos"""),
     (s, dir) =>
-      annotated(s, dir)
-        .filter(size(col("tags")) > 0)
-        .select(col("doc_id"),
-          recordNum(col("text")).as("record_num"),
-          literalText(col("text"), "text").as("literal_text"),
-          posexplode(col("tags")))
-        .select(col("doc_id"), col("record_num"), col("literal_text"),
-          col("pos").as("tag_pos"),
-          col("col.literal").as("tag_literal"),
-          col("col.issue").as("tag_issue"),
-          col("col.source").as("tag_source"))
-        .orderBy("doc_id", "tag_pos"))
+      flaggedTags(annotated(s, dir)).drop("source").orderBy("doc_id", "tag_pos"))
 
   /** P2/P6 null-vs-empty semantics (reference call-debias.py:59,
     * parser.py:25-27; SURVEY.md §7.4.2): tags forced to NULL when empty,
@@ -349,7 +347,7 @@ object Parity {
       GROUP BY lang
       ORDER BY lang"""),
     (s, dir) => {
-      val corpusDir = s"${sys.props("java.io.tmpdir")}/graft_corpus_${scratchKey(dir)}"
+      val corpusDir = graft.sources.Formats.scratch(dir, "graft_corpus")
       val d = docs(s, dir)
       // one blank line per language exercises the P1 drop
       val blanks = d.select(col("lang")).distinct().withColumn("text", lit("  "))
@@ -388,7 +386,7 @@ object Parity {
       GROUP BY t.term
       ORDER BY n_tags DESC, tag_literal"""),
     (s, dir) => {
-      val outDir = s"${sys.props("java.io.tmpdir")}/graft_results_${scratchKey(dir)}"
+      val outDir = graft.sources.Formats.scratch(dir, "graft_results")
       annotated(s, dir)
         .select(col("source"),
           struct(col("doc_id"), col("lang").as("language"),
@@ -422,13 +420,7 @@ object Parity {
   private val x1 = GraftQuery(
     "parity_x1_batched_annotator",
     "mapPartitions batched annotator w/ retry-skip, flatten, A1 (X1/X2/X3/F1)",
-    Some(s"""
-      WITH $flatSql
-      SELECT issue_literal, count(*) AS n_tags
-      FROM flat
-      WHERE issue_literal IS NOT NULL
-      GROUP BY issue_literal
-      ORDER BY n_tags DESC, issue_literal"""),
+    Some(issueCountSql("issue_literal IS NOT NULL")),
     (s, dir) => {
       import s.implicits._
       val metrics = AnnotatorMetrics(s, "parity_x1")
@@ -436,11 +428,7 @@ object Parity {
         docs(s, dir).as[Doc],
         new RetryingAnnotator(new LexiconAnnotator(), maxRetries = 3, sleeper = _ => ()),
         metrics)
-      flatten(ann.toDF())
-        .filter(col("issue_literal").isNotNull)
-        .groupBy(col("issue_literal"))
-        .agg(count(lit(1)).as("n_tags"))
-        .orderBy(col("n_tags").desc, col("issue_literal"))
+      issueCounts(flatten(ann.toDF()))
     })
 
   /** Full flatten view dumped directly — the F1 row-shape itself is the

@@ -13,8 +13,8 @@ package graft.parity
   * Scope is deliberately tiny: ASCII text placement only (the corpus is
   * ASCII; anything else blanks), no compression, no encryption, no
   * incremental update — a valid-by-construction subset any conforming
-  * reader parses. This closes the one fidelity gap the HTML twin left
-  * (a user expecting `X.pdf` BYTES now gets them).
+  * reader parses: a user expecting `X.pdf` gets PDF bytes, as from
+  * the reference.
   */
 object PdfWriter {
 
@@ -50,7 +50,7 @@ object PdfWriter {
     sb.append("0 0 0 rg\n")
     y -= 18
     rows.zipWithIndex.foreach { case (cells, i) =>
-      // zebra parity follows the GLOBAL row number, like the HTML twin
+      // zebra parity follows the GLOBAL row number across pages
       if ((globalRowOffset + i) % 2 == 1) {
         sb.append(s"0.94 0.94 0.97 rg 36 ${y - 4} ${pageW - 72} 14 re f\n0 0 0 rg\n")
       }

@@ -1,48 +1,31 @@
 package graft.parity
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** S6: the flagged-entry report sink (reference call-debias.py:54-136
   * renders a landscape-A4 PDF table per input file, only when the file
-  * has >= 1 flagged entry). PDF rendering is presentation, not query
-  * semantics (SURVEY.md §2.1) and no PDF library ships in this
-  * environment, so the sink renders the same table as fixed-width text —
-  * same columns (Record #, Literal, tag detail), same first-row-only
-  * blanking of the group keys (call-debias.py:106-108), same
-  * one-file-per-source gating — via a distributed partitioned write, not
-  * a driver loop.
+  * has >= 1 flagged entry). [[writeFlaggedPdfReports]] renders that PDF
+  * with the dependency-free [[PdfWriter]]; [[writeFlaggedReports]]
+  * renders the same table as fixed-width text for line-oriented
+  * consumers. Both render [[Parity.flaggedTags]] — the A6 rows — with
+  * the same columns (Record #, Literal, tag detail), the same
+  * first-row-only blanking of the group keys (call-debias.py:106-108)
+  * and the same one-file-per-source gating.
   *
-  * Scale: repartition by source puts each report in exactly one task;
-  * rendering is a per-row projection; no data returns to the driver.
+  * Scale: each report is assembled in one task, keyed by source;
+  * rendering is a per-row projection; no report data returns to the
+  * driver.
   */
 object ReportSink {
 
   private def pad(c: org.apache.spark.sql.Column, w: Int) =
     rpad(coalesce(c.cast("string"), lit("")), w, " ")
 
-  /** One row per (flagged doc, tag): the exploded A6 shape both report
-    * renderers consume. Docs without tags are dropped here — the
-    * reference's gating (call-debias.py:58-62 skips the whole file when
-    * nothing is flagged) falls out because every downstream frame
-    * (headers, page breaks) derives its sources from these rows. */
-  private def flaggedTagRows(annotated: DataFrame): DataFrame =
-    annotated.filter(size(col("tags")) > 0)
-      .select(col("source"), col("doc_id"),
-        Parity.recordNum(col("text")).as("record_num"),
-        Parity.literalText(col("text"), "text").as("literal_text"),
-        posexplode(col("tags")))
-      .select(col("source"), col("doc_id"), col("record_num"), col("literal_text"),
-        col("pos").as("tag_pos"),
-        col("col.literal").as("tag_literal"),
-        col("col.issue").as("tag_issue"),
-        col("col.source").as("tag_source"))
-
   /** Render flagged docs (the A6 shape) as per-source text reports under
     * `outDir/source=<source>/`. Returns the line count written. */
   def writeFlaggedReports(annotated: DataFrame, outDir: String): Long = {
-    val rows = flaggedTagRows(annotated)
+    val rows = Parity.flaggedTags(annotated)
     // first-row-only blanking: tag rows after the first show blank keys
     val first = col("tag_pos") === 0
     val line = concat(
@@ -80,12 +63,12 @@ object ReportSink {
     * source under `outDir`, with the reference layout (title, repeated
     * per-page header with the #4a4a8a band, zebra stripes, first-row-
     * only blanking, flagged-only gating) rendered by the dependency-
-    * free [[PdfWriter]] — closing the byte-fidelity gap the HTML twin
-    * left. Distributed like the reference's unit of work: one SOURCE =
-    * one PDF assembled inside one executor task (groupByKey over
-    * source — a per-file report fits task memory by the same argument
-    * the reference uses loading whole files), written executor-side to
-    * `outDir` (a shared filesystem on a real cluster; local tmp here).
+    * free [[PdfWriter]]. Distributed like the reference's unit of
+    * work: one SOURCE = one PDF assembled inside one executor task
+    * (groupByKey over source — a per-file report fits task memory by
+    * the same argument the reference uses loading whole files),
+    * written executor-side to `outDir` (a shared filesystem on a real
+    * cluster; local tmp here).
     * Returns the body row count summed from the mapGroups OUTPUT (an
     * accumulator bumped inside the action would double-count under
     * task retry/speculation even though the file writes themselves are
@@ -95,7 +78,7 @@ object ReportSink {
     import spark.implicits._
     new java.io.File(outDir).mkdirs()
     val header = Seq("Record #", "Literal", "Tag", "Issue", "Source")
-    val cells = flaggedTagRows(annotated).select(
+    val cells = Parity.flaggedTags(annotated).select(
       col("source"), col("doc_id"), col("tag_pos"),
       coalesce(col("record_num").cast("string"), lit("")).as("rec"),
       coalesce(col("literal_text"), lit("")).as("litx"),
@@ -140,81 +123,5 @@ object ReportSink {
       } finally java.nio.file.Files.deleteIfExists(tmp)
       n.toLong
     }.agg(coalesce(sum(col("value")), lit(0L))).as[Long].head()
-  }
-
-  private def esc(c: org.apache.spark.sql.Column) =
-    regexp_replace(regexp_replace(regexp_replace(
-      coalesce(c.cast("string"), lit("")),
-      "&", "&amp;"), "<", "&lt;"), ">", "&gt;")
-
-  /** Render flagged docs as per-source HTML reports under
-    * `outDir/source=<source>/`, mirroring the reference PDF layout
-    * (call-debias.py:64-131) rule for rule, since no PDF library ships in
-    * this environment:
-    *  - title line "De-bias Report: <source>" (the per-file Title para);
-    *  - 3-column table (Record # / Literal / Tag details), tag details as
-    *    bold-labelled Literal/Issue/Source lines (call-debias.py:99-104);
-    *  - header row repeated at the top of every [[rowsPerPage]]-row page
-    *    (`repeatRows=1`), styled #4a4a8a on white (the TableStyle
-    *    BACKGROUND/TEXTCOLOR pair);
-    *  - zebra body rows (the ROWBACKGROUNDS white / #f0f0f8 alternation);
-    *  - first-row-only blanking of record #/literal per doc
-    *    (call-debias.py:106-108);
-    *  - flagged-only gating: a source with no tagged docs gets no file.
-    * Distributed: every frame is keyed by source, one task renders one
-    * report, nothing returns to the driver. Returns the body row count. */
-  def writeFlaggedHtmlReports(annotated: DataFrame, outDir: String): Long = {
-    val rn = row_number().over(
-      Window.partitionBy(col("source")).orderBy(col("doc_id"), col("tag_pos"))) - 1
-    // rows feeds six jobs (body + count, pages -> opens/closes, srcs ->
-    // head/foot) — persist so the explode+window shuffle runs once
-    val rows = flaggedTagRows(annotated)
-      .withColumn("rn", rn)
-      .withColumn("page", (col("rn") / rowsPerPage).cast("int"))
-      .persist()
-    val first = col("tag_pos") === 0
-    val zebra = when(col("rn") % 2 === 0, "even").otherwise("odd")
-    val detail = concat(
-      lit("<b>Literal:</b> "), esc(col("tag_literal")), lit("<br/>"),
-      lit("<b>Issue:</b> "), esc(col("tag_issue")), lit("<br/>"),
-      lit("<b>Source:</b> "), esc(col("tag_source")))
-    val bodyLine = concat(
-      lit("<tr class=\""), zebra, lit("\"><td>"),
-      when(first, esc(col("record_num"))).otherwise(lit("")), lit("</td><td>"),
-      when(first, esc(col("literal_text"))).otherwise(lit("")), lit("</td><td>"),
-      detail, lit("</td></tr>"))
-    // line ordering key: (page, seq, rn) — seq 0 = page open/header,
-    // seq 1 = body rows, seq 2 = page close; the document head sorts
-    // before page 0 and the foot after the last page
-    val body = rows.select(col("source"), col("page"), lit(1).as("seq"),
-      col("rn"), bodyLine.as("line"))
-    val style = "<style>thead th{background:#4a4a8a;color:#fff;text-align:left;}" +
-      "tr.odd td{background:#f0f0f8;}tr.even td{background:#fff;}" +
-      "table{border:0.5pt solid grey;border-collapse:collapse;width:100%;}" +
-      "td,th{border:0.25pt solid lightgrey;vertical-align:top;padding:4pt;}</style>"
-    val header = "<table><thead><tr><th>Record #</th><th>Literal</th>" +
-      "<th>Tag details</th></tr></thead><tbody>"
-    val pages = rows.select(col("source"), col("page")).distinct()
-    val pageOpens = pages.select(col("source"), col("page"), lit(0).as("seq"),
-      lit(-1L).as("rn"), lit(header).as("line"))
-    val pageCloses = pages.select(col("source"), col("page"), lit(2).as("seq"),
-      lit(-1L).as("rn"), lit("</tbody></table>").as("line"))
-    val srcs = rows.select(col("source")).distinct()
-    val docHead = srcs.select(col("source"), lit(-1).as("page"), lit(0).as("seq"),
-      lit(-1L).as("rn"),
-      concat(lit("<html><head>" + style + "</head><body><h1>De-bias Report: "),
-        esc(col("source")), lit("</h1>")).as("line"))
-    val docFoot = srcs.select(col("source"), lit(Int.MaxValue).as("page"),
-      lit(0).as("seq"), lit(-1L).as("rn"), lit("</body></html>").as("line"))
-    try {
-      val n = body.count()
-      docHead.unionByName(pageOpens).unionByName(body)
-        .unionByName(pageCloses).unionByName(docFoot)
-        .repartition(col("source"))
-        .sortWithinPartitions("source", "page", "seq", "rn")
-        .select(col("source"), col("line"))
-        .write.mode("overwrite").partitionBy("source").text(outDir)
-      n
-    } finally rows.unpersist()
   }
 }

@@ -23,16 +23,18 @@ import org.apache.spark.sql.types._
   */
 object Formats {
 
-  /** Session-scoped scratch root: per-process so concurrent harnesses
-    * (test JVM vs Bench) never collide, under java.io.tmpdir so the
-    * repo tree stays clean. */
+  /** Process-scoped scratch root of every per-dir round-trip dump (the
+    * format round trips here, the parity corpus and results, the
+    * binary-file corpus): per-process so concurrent harnesses (test JVM
+    * vs Bench) never collide, under java.io.tmpdir so the repo tree
+    * stays clean, and one tree so [[dropScratch]] deletes them all. */
   private def scratchRoot: String =
     s"${sys.props("java.io.tmpdir")}/graft_formats_p${ProcessHandle.current().pid()}"
 
   /** Scratch path for `sub` under `dir`'s dataset: keyed by the shared
     * [[graft.T.scratchKey]] (hashCode could collide two dirs onto one
     * path, silently serving one SF's rows to the other's lazy read). */
-  private def scratch(dir: String, sub: String): String =
+  private[graft] def scratch(dir: String, sub: String): String =
     s"$scratchRoot/${sub}_${graft.T.scratchKey(dir)}"
 
   /** Delete this process's format-scratch tree — wired into the

@@ -107,7 +107,7 @@ object Layout {
       // constant-folded before the DPP rule looks for a selective dim
       // filter, and no pruning subquery would be planted
       val dimPath = written.computeIfAbsent(s"$dir#langdim", { _ =>
-        val p = s"${sys.props("java.io.tmpdir")}/graft_layout_p${ProcessHandle.current().pid()}/${dir.hashCode.toHexString}/langdim"
+        val p = s"$layoutRoot/${T.scratchKey(dir)}/langdim"
         Seq(("en", "germanic"), ("de", "germanic"), ("fr", "romance"),
           ("es", "romance"), ("zh", "sinitic")).toDF("lang", "family")
           .write.mode("overwrite").parquet(p)

@@ -479,12 +479,11 @@ object EventStreams {
 
   private val gapMicros: Long = 30L * 60 * 1000 * 1000
 
-  /** Custom-state streaming (KeyValueGroupedDataset.flatMapGroupsWithState):
-    * per-user session counting with the exact batch gap rule (`> 30 min`
-    * starts a new session), state = (count so far, last event time). This
-    * is the shape for logic session_window can't express (e.g. carrying
-    * counters across sessions); emits the updated per-user row each batch
-    * (Update mode). */
+  /** µs-exact epoch of an event time (Timestamp.getTime is ms-truncated;
+    * the data is µs) — the sort and gap key of the typed stateful paths. */
+  private def micros(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
   /** One filled event for the streaming forward-fill. `last_purchase_value`
     * is None until the user's first purchase (matching batch NULL). */
   final case class FilledEvent(event_id: Long, user_id: Long, event_type: String,
@@ -509,8 +508,6 @@ object EventStreams {
       .flatMapGroupsWithState[FillState, FilledEvent](
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         (user: Long, batch: Iterator[Event], state: GroupState[FillState]) =>
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
           var st = state.getOption.getOrElse(FillState(seen = false, 0.0))
           val sorted = batch.toSeq.sortBy(e => (micros(e.ts), e.event_id))
           val out = sorted.map { e =>
@@ -523,15 +520,21 @@ object EventStreams {
       }
   }
 
-  /** [[userSessionStats]] on the transformWithState API (Spark 4's
-    * arbitrary-state successor to flatMapGroupsWithState): state is a
-    * named, typed [[org.apache.spark.sql.streaming.ValueState]] obtained
-    * from the processor handle — composable (a processor can hold many
+  /** Custom-state per-user session counting on the transformWithState
+    * API (Spark 4's arbitrary-state successor to
+    * flatMapGroupsWithState) with the exact batch gap rule (`> 30 min`
+    * starts a new session); state = (counts so far, last event time),
+    * and the updated per-user row is emitted each batch (Update mode).
+    * This is the shape for logic session_window can't express (e.g.
+    * carrying counters across sessions). State is a named, typed
+    * [[org.apache.spark.sql.streaming.ValueState]] obtained from the
+    * processor handle — composable (a processor can hold many
     * value/list/map states), TTL-capable per state, and RocksDB-backed
     * (the provider transformWithState requires, which is also the one a
-    * 100 TB deployment runs for state larger than executor heap). Same
-    * gap rule and ordering discipline as the fMGWS twin;
-    * EventStreamsSpec proves the two agree exactly. */
+    * 100 TB deployment runs for state larger than executor heap).
+    * Micro-batch iterators are not time-ordered; order is restored per
+    * batch. EventStreamsSpec checks the per-user totals against
+    * e5_sessionization. */
   final class SessionStatsProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, UserSessions] {
     @transient private var state:
@@ -544,8 +547,6 @@ object EventStreams {
     override def handleInputRows(user: Long, rows: Iterator[Event],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[UserSessions] = {
-      def micros(t: java.sql.Timestamp): Long =
-        Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
       val prev = Option(state.get())
         .getOrElse(UserSessions(user, 0L, 0L, Long.MinValue))
       val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
@@ -623,8 +624,6 @@ object EventStreams {
         org.apache.spark.sql.Encoders.product[OpenSession],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
-    private def micros(t: java.sql.Timestamp): Long =
-      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
     private def ceilMs(us: Long): Long = Math.floorDiv(us + 999L, 1000L)
     private def toTs(us: Long): java.sql.Timestamp = {
       val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
@@ -700,31 +699,5 @@ object EventStreams {
       .transformWithState(new SessionCloserProcessor(gapUs.microseconds),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
-  }
-
-  def userSessionStats(events: Dataset[Event]): Dataset[UserSessions] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserSessions, UserSessions](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, batch: Iterator[Event], state: GroupState[UserSessions]) =>
-          // µs-exact epoch (Timestamp.getTime is ms-truncated; the data is µs)
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          val prev = state.getOption.getOrElse(UserSessions(user, 0L, 0L, Long.MinValue))
-          // micro-batch iterators are not time-ordered; restore event order
-          val sorted = batch.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          val next = sorted.foldLeft(prev) { (st, e) =>
-            val tsMicros = micros(e.ts)
-            val newSession = st.last_ts == Long.MinValue || tsMicros - st.last_ts > gapMicros
-            UserSessions(user,
-              st.n_sessions + (if (newSession) 1 else 0),
-              st.n_events + 1,
-              tsMicros)
-          }
-          if (sorted.isEmpty) Iterator.empty
-          else { state.update(next); Iterator.single(next) }
-      }
   }
 }

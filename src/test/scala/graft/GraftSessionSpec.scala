@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The session factory: CPU-spec parsing, the strict count parser the
-  * mains share, the settings every session gets, and a guard that no
-  * entry point builds a session outside the factory. */
+  * mains share, the settings every session gets, a guard that no
+  * entry point builds a session outside the factory, and the scratch
+  * dirs that release deletes. */
 class GraftSessionSpec extends SparkSpec {
 
   test("cpuCount: a positive integer spec is the count; anything else falls back") {
@@ -45,5 +46,31 @@ class GraftSessionSpec extends SparkSpec {
     val sites = files.filter(p => Files.readString(p).contains(needle))
       .map((p: Path) => p.getFileName.toString)
     sites shouldBe Seq("GraftSession.scala")
+  }
+
+  /** Dirs named `graft_…` in java.io.tmpdir and one level below it. */
+  private def graftDirs(): Set[Path] = {
+    def children(d: Path): Seq[Path] =
+      try Files.list(d).iterator.asScala.filter(p =>
+        Files.isDirectory(p) && p.getFileName.toString.startsWith("graft_")).toSeq
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => Nil }
+    val top = children(Paths.get(sys.props("java.io.tmpdir")))
+    (top ++ top.flatMap(children)).toSet
+  }
+
+  test("release deletes the corpus, results and blob dirs the round-trip queries write") {
+    val copy = tempDir("graft_scratch_copy")
+    Files.copy(Paths.get(sfDir, "documents.parquet"), Paths.get(copy, "documents.parquet"))
+    val before = graftDirs()
+    Seq("parity_s1s3_text_corpus_scan", "parity_s4s5_json_roundtrip", "mm_binary_ingest")
+      .foreach(q => Registry.byName(q).run(spark, copy).collect())
+    val written = (graftDirs() -- before).filter(p => Seq("graft_corpus_", "graft_results_",
+      "graft_binfiles_").exists(p.getFileName.toString.startsWith))
+    // the blob dir's key also covers the documents listing: the copy's is the one new one
+    val (blobs, keyed) = written.toSeq.map(_.getFileName.toString).partition(_.startsWith("graft_binfiles_"))
+    blobs should have size 1
+    keyed.sorted shouldBe Seq(s"graft_corpus_${T.scratchKey(copy)}", s"graft_results_${T.scratchKey(copy)}")
+    GraftSession.release(spark)
+    written.filter(Files.exists(_)) shouldBe empty
   }
 }

@@ -62,19 +62,6 @@ class AnnotateSpec extends SparkSpec {
     out shouldBe BatchSkipped("injected annotator failure", 3)
   }
 
-  test("observed metrics ride the annotation pass (X3 declarative path)") {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val (df, obs) = Annotate.annotatedObserved(docs)
-    val n = df.count() // any action materializes the metrics
-    val m = obs.get
-    m("n_docs").asInstanceOf[Long] shouldBe n
-    m("n_tags").asInstanceOf[Long] should be >= m("n_tagged").asInstanceOf[Long]
-    // agrees with direct computation
-    val expectTagged = Annotate.annotated(docs)
-      .filter(org.apache.spark.sql.functions.size(col("tags")) > 0).count()
-    m("n_tagged").asInstanceOf[Long] shouldBe expectTagged
-  }
-
   test("a skipped batch drops its rows but never kills the run (X2/X3)") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").as[Doc]
     val n = docs.count()

@@ -100,45 +100,28 @@ class ReportSinkSpec extends SparkSpec {
     "\\(100\\)".r.findAllIn(pdf).size shouldBe 1
   }
 
-  test("HTML layout: repeated per-page headers, zebra rows, gating, blanking") {
-    val out = tempDir("graft_report_html")
-    // 30 single-tag docs in fileA -> 30 body rows -> 2 pages at 24/page;
-    // doc 100 has two tags ("slow big") so its second row is blanked
-    val docs = (1 to 29).map(i => (i.toLong, s"$i, slow entry $i", "en", "fileA")) :+
-      (100L, "100, slow big pair", "en", "fileA") :+
-      (200L, "200, clean text", "en", "fileB") // no tags -> fileB absent
-    val ann = Annotate.annotated(docs.toDF("doc_id", "text", "lang", "source"))
+  test("text and PDF report body rows equal the parity_a6_flagged_report rows, per source") {
+    val ann = Annotate.annotated(graft.T(spark, sfDir, "documents"))
+    val txt = tempDir("graft_report_a6_txt")
+    val nTxt = ReportSink.writeFlaggedReports(ann, txt)
+    val nPdf = ReportSink.writeFlaggedPdfReports(ann, tempDir("graft_report_a6_pdf"))
+    val a6 = graft.Registry.byName("parity_a6_flagged_report").run(spark, sfDir)
+    nTxt should be > 0L
+    nTxt shouldBe a6.count()
+    nPdf shouldBe nTxt
 
-    val n = ReportSink.writeFlaggedHtmlReports(ann, out)
-    n shouldBe 31L // 29 + 2 tags for doc 100
-
-    // flagged-only gating: the tagless source produces no report at all
-    Files.exists(Paths.get(s"$out/source=fileB")) shouldBe false
-
-    val a = Files.list(Paths.get(s"$out/source=fileA")).iterator().asScala.toSeq
-      .filter(_.toString.endsWith(".txt"))
-      .flatMap(p => Files.readAllLines(p).asScala)
-    a.head should include("<h1>De-bias Report: fileA</h1>")
-    a.last shouldBe "</body></html>"
-
-    // repeated headers: ceil(31 / 24) = 2 pages, each with its own header
-    a.count(_.contains("<thead>")) shouldBe 2
-    a.count(_ == "</tbody></table>") shouldBe 2
-    // header precedes its page's body rows on BOTH pages
-    val headerIdx = a.zipWithIndex.collect { case (l, i) if l.contains("<thead>") => i }
-    headerIdx(1) should be > headerIdx.head + 24
-
-    // zebra: body rows alternate even/odd in order
-    val bodyRows = a.filter(_.startsWith("<tr class="))
-    bodyRows should have size 31
-    bodyRows.zipWithIndex.foreach { case (l, i) =>
-      l should startWith(s"""<tr class="${if (i % 2 == 0) "even" else "odd"}">""")
-    }
-
-    // first-row-only blanking: doc 100's first tag row carries the keys,
-    // the second starts with two empty cells
-    bodyRows.exists(l => l.contains("<td>100</td>") && l.contains("slow")) shouldBe true
-    bodyRows.exists(l => l.startsWith("<tr class=\"odd\"><td></td><td></td>") ||
-      l.startsWith("<tr class=\"even\"><td></td><td></td>")) shouldBe true
+    // the text report's body lines (all but its header) per source
+    val bodyLines = Files.list(Paths.get(txt)).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("source="))
+      .map { d =>
+        d.getFileName.toString.stripPrefix("source=") ->
+          (Files.list(d).iterator().asScala.toSeq
+            .filter(_.toString.endsWith(".txt"))
+            .map(p => Files.readAllLines(p).size.toLong).sum - 1L)
+      }.toMap
+    val a6PerSource = a6.join(graft.T(spark, sfDir, "documents").select("doc_id", "source"), "doc_id")
+      .groupBy("source").count()
+      .as[(String, Long)].collect().toMap
+    bodyLines shouldBe a6PerSource
   }
 }

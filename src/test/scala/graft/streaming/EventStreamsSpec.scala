@@ -382,35 +382,7 @@ class EventStreamsSpec extends SparkSpec {
     streamed shouldBe batch
   }
 
-  test("flatMapGroupsWithState carries per-user session state across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[EventStreams.Event]
-    val updates = scala.collection.mutable.ArrayBuffer[EventStreams.UserSessions]()
-    // time-ordered feed split mid-stream: users spanning the split must
-    // NOT double-count the session at the boundary (state carry)
-    val all = toEvents(batchEvents.orderBy($"ts", $"event_id").collect())
-    val (b1, b2) = all.splitAt(all.size / 2)
-    stream.addData(b1); stream.addData(b2)
-    val q = EventStreams.userSessionStats(stream.toDS())
-      .writeStream.outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[EventStreams.UserSessions], _: Long) =>
-        updates.synchronized { updates ++= batch.collect() }; ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-
-    // last update per user = final running totals
-    val finalPerUser = updates.groupBy(_.user_id).map { case (u, us) =>
-      u -> { val last = us.last; (last.n_sessions, last.n_events) }
-    }
-    val batch = Registry.byName("e5_sessionization").run(spark, sfDir)
-      .select($"user_id", $"n_sessions", $"n_events")
-      .as[(Long, Long, Long)].collect()
-      .map { case (u, s, n) => u -> ((s, n)) }.toMap
-    finalPerUser shouldBe batch
-  }
-
-  test("transformWithState session stats equal the fMGWS twin and the batch oracle") {
+  test("transformWithState session stats match e5_sessionization per user") {
     implicit val sqlCtx = spark.sqlContext
     // transformWithState requires the RocksDB state store provider (also
     // the provider a deployment with state > heap runs); scope it to
@@ -422,6 +394,8 @@ class EventStreamsSpec extends SparkSpec {
     try {
       val stream = MemoryStream[EventStreams.Event]
       val updates = scala.collection.mutable.ArrayBuffer[EventStreams.UserSessions]()
+      // time-ordered feed split mid-stream: users spanning the split must
+      // NOT double-count the session at the boundary (state carry)
       val all = toEvents(batchEvents.orderBy($"ts", $"event_id").collect())
       val (b1, b2) = all.splitAt(all.size / 2)
       stream.addData(b1); stream.addData(b2)
